@@ -29,13 +29,18 @@ object Bench {
     val loadStart = loadAvg
     val results = SparkEntry.queries.filterNot(q => exclude(q._1))
       .map { case (name, fn) =>
-        def once(): Double = {
+        // a pass that throws is a failure, never a timing: the query
+        // stops at its first failed pass and is left out of the maps
+        def once(): Option[Double] = {
           val t0 = System.nanoTime()
-          try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-          (System.nanoTime() - t0) / 1e9
+          try {
+            fn(spark, sfDir).count()
+            Some((System.nanoTime() - t0) / 1e9)
+          } catch { case _: Throwable => None }
         }
-        (1 to warmups).foreach(_ => once())
-        val measured = (1 to iters).map(_ => once()).sorted
+        val passes = Iterator.fill(warmups + iters)(once())
+          .takeWhile(_.isDefined).flatten.toVector
+        val measured = passes.drop(warmups).sorted
         // Bench ISOLATION (r13 verdict #2): store-heavy queries leave
         // localCheckpoint blocks behind; accumulated across the suite
         // they pressure later queries' execution memory and the
@@ -49,16 +54,20 @@ object Bench {
         spark.sharedState.cacheManager.clearCache()
         spark.sparkContext.getPersistentRDDs.values
           .foreach(_.unpersist(blocking = true))
-        name -> (measured.head, measured(measured.length / 2))
+        name -> (if (passes.length < warmups + iters) None
+          else Some((measured.head, measured(measured.length / 2))))
       }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v._1 }
+    val nFailed = results.count(_._2.isEmpty)
+    val timed = results.collect { case (k, Some(v)) => k -> v }
+    val qs = timed.map { case (k, v) => s"\"" + k + "\":" + v._1 }
       .mkString("{", ",", "}")
-    val med = results.map { case (k, v) => s"\"" + k + "\":" + v._2 }
+    val med = timed.map { case (k, v) => s"\"" + k + "\":" + v._2 }
       .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.map(_._1).sum else 0.0
+    val total = timed.values.map(_._1).sum
     val loadEnd = loadAvg
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""medians":$med,"warmups":$warmups,"iters":$iters,""" +
+      s""""medians":$med,"n_failed":$nFailed,""" +
+      s""""warmups":$warmups,"iters":$iters,""" +
       s""""load_start":$loadStart,"load_end":$loadEnd,"sf":"$sfDir"}""")
     // Truncation-safe duplicate LAST (r12 verdict #7): a
     // tail-truncating log capture (the driver keeps ~2 kB) must
@@ -73,11 +82,11 @@ object Bench {
     // for the driver's parser. The final line now uses the contract
     // key "queries" (truncated to the top 20, flagged as such); the
     // full map still prints above, and no number changed.
-    val top = results.toSeq.sortBy(-_._2._1).take(20)
+    val top = timed.toSeq.sortBy(-_._2._1).take(20)
       .map { case (k, v) => s"\"" + k + "\":" + v._1 }
       .mkString("{", ",", "}")
     println(s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      s""""queries":$top,"n_queries":${results.size},""" +
+      s""""queries":$top,"n_queries":${timed.size},"n_failed":$nFailed,""" +
       s""""queries_truncated_to_top":20,""" +
       s""""load_start":$loadStart,"load_end":$loadEnd,"sf":"$sfDir"}""")
     spark.stop()

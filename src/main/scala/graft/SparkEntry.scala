@@ -1539,12 +1539,16 @@ object SparkEntry {
          |  GROUP BY doc_id HAVING count(DISTINCT gram) >= 3),
          |clean AS MATERIALIZED (
          |  SELECT * FROM co WHERE doc_id NOT IN (SELECT doc_id FROM cont)),
-         |splits AS (
-         |  SELECT 'split_' || CASE WHEN b < 80 THEN 'train'
-         |    WHEN b < 90 THEN 'val' ELSE 'test' END AS stage,
+         |split_counts AS (
+         |  SELECT CASE WHEN b < 80 THEN 'train'
+         |    WHEN b < 90 THEN 'val' ELSE 'test' END AS split,
          |    count(*) AS rows
          |  FROM (SELECT ((doc_id % 2147483648) * 2654435761) % 4294967296 % 100 AS b
-         |        FROM clean) GROUP BY 1)
+         |        FROM clean) GROUP BY 1),
+         |splits AS (
+         |  SELECT 'split_' || l.split AS stage, coalesce(c.rows, 0) AS rows
+         |  FROM (VALUES ('train'), ('val'), ('test')) l(split)
+         |  LEFT JOIN split_counts c ON c.split = l.split)
          |SELECT stage, rows FROM (
          |  SELECT 'raw' AS stage, count(*) AS rows FROM documents
          |  UNION ALL SELECT 'quality', count(*) FROM q

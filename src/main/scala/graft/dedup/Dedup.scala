@@ -1392,7 +1392,6 @@ object Dedup {
     * (id, lbl) like [[connectedComponents]]. */
   def connectedComponentsStars(edges: DataFrame,
       maxRounds: Int = 30,
-      roundProbe: (Int, DataFrame) => Unit = null,
       setAsideEdges: Long = 2000000L): DataFrame = {
     var e = edges
       .select(greatest(col("src"), col("dst")).as("u"),
@@ -1491,9 +1490,6 @@ object Dedup {
         .filter(col("u") =!= col("v"))
         .repartition(roundParallelism, col("u"), col("v")).distinct()
         .localCheckpoint(true)
-      // measurement hook (the r10 frontier audit) — null in every
-      // production path, wired only by graft.tools.Probe
-      if (roundProbe != null) roundProbe(round, small)
       // fixpoint: the canonical edge set stopped changing — digest
       // compare first (one job), exact exceptAll only on digest match
       val smallDigest = digest(small)
@@ -1824,14 +1820,7 @@ object Dedup {
     * oracle recomputes it from scratch via transitive closure) — but
     * per batch the engine never touches corpus text or corpus-internal
     * pairs again. */
-  def d11ClusterMaintain(s: SparkSession, d: String): DataFrame =
-    d11Body(s, d, checkpoint = false)
-
-  /** d11's body with the band-materialization choice explicit — the
-    * PROBE_D11FORM A/B twin (x3's checkpoint-vs-recompute question
-    * re-asked here, where the CC stage multiplies consumers). */
-  private[graft] def d11Body(s: SparkSession, d: String,
-      checkpoint: Boolean): DataFrame = {
+  def d11ClusterMaintain(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val batch = docs.filter(col("doc_id") % 10 === 0)
     val corpus = docs.filter(col("doc_id") % 10 =!= 0)
@@ -1842,10 +1831,8 @@ object Dedup {
     // recompute" call inverted once the fused shingle+minhash scan
     // went native). In production the corpus side IS the persisted
     // band store, so neither materialization happens per batch.
-    def mat(df: DataFrame) =
-      if (checkpoint) df.localCheckpoint(true) else df
-    val cb = mat(mhBands(corpus))
-    val bb = mat(mhBands(batch))
+    val cb = mhBands(corpus)
+    val bb = mhBands(batch)
     // ONE width for all three joins, from the FULL corpus count —
     // the oracle (ccExactSql over the shared widened band CTE) and
     // d10 both widen from the documents table, and d11 is documented

@@ -344,7 +344,7 @@ object Multimodal {
     // canonically equal past the window, so the decode's exchange is
     // REUSED and the map effectively runs once — materializing the
     // gram frame buys nothing the reuse doesn't already give
-    m6Candidates(m6GramsNoCheckpoint(s, d), m6BandBits(n))
+    m6Candidates(m6Grams(s, d), m6BandBits(n))
   }
 
   /** m6's candidate band width: 2^bits ∈ [16·n, 32·n] for doc count
@@ -360,13 +360,9 @@ object Multimodal {
   private[graft] def m6BandBits(n: Long): Int =
     13 + (9 to 39).count(t => n > (1L << t))
 
-  /** m6's checkpointed (doc_id, h1, h2) frame-gram frame — one decode
-    * pass in the batched partition map (probe A/B twin). */
-  private[graft] def m6Grams(s: SparkSession, d: String): DataFrame =
-    m6GramsNoCheckpoint(s, d).localCheckpoint(true)
-
-  private[graft] def m6GramsNoCheckpoint(s: SparkSession,
-      d: String): DataFrame = {
+  /** m6's (doc_id, h1, h2) frame-gram frame — one decode pass in the
+    * batched partition map. */
+  private[graft] def m6Grams(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val media = Tables.documents(s, d)
       .filter(col("text").isNotNull) // null payload would NPE in the partition map

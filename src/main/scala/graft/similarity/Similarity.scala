@@ -1233,20 +1233,16 @@ object Similarity {
       .localCheckpoint(true)
     val byQueryEf = Window.partitionBy("q_id")
       .orderBy(col("exp").asc, col("cos3").desc, col("c_id").asc)
-    // conf-gated round fusion (r15 verdict #6 — see s16Walk)
-    val cpEvery = math.max(1, q.sparkSession.conf
-      .getOption("spark.graft.walk.cpEvery").map(_.toInt).getOrElse(1))
-    for (r <- 1 to rounds) {
-      val cp = r % cpEvery == 0 || r == rounds
+    for (_ <- 1 to rounds) {
       val ranked = state.withColumn("rk", row_number().over(byQueryEf))
       val frontier = ranked
         .filter(!col("exp") && col("rk") <= beam)
         .select("q_id", "c_id")
-      state = maybeCp(ranked
+      state = cpState(ranked
         .select(col("q_id"), col("c_id"), col("cos3"),
           (col("exp") || col("rk") <= beam).as("exp"))
         .union(expandFrontier(frontier, state, graph, lq, cv)
-          .withColumn("exp", lit(false))), cp)
+          .withColumn("exp", lit(false))))
     }
     state
       .withColumn("rank", row_number().over(byQuery).cast("long"))
@@ -1486,7 +1482,7 @@ object Similarity {
     * of the embeddings parquet's file names, lengths, and mtimes
     * (one FS listing — the MySqlDump memo-key pattern). Folded into
     * the store directory name, so REGENERATING the corpus at the
-    * same path (ProbeGen rerun, fixture rebuild) keys a fresh build
+    * same path (a fixture rebuild) keys a fresh build
     * instead of silently answering from the stale graph/atlas. */
   private[graft] def corpusFingerprint(s: SparkSession, d: String,
       table: String = "embeddings"): Long = {
@@ -1777,27 +1773,23 @@ object Similarity {
     // round (frontier, expanded∪frontier, visited∪new) re-copied the
     // whole accumulated walk state and fanned into ~15 AQE stage
     // jobs per round — 133 Spark jobs per stored-walk invocation,
-    // pure scheduler overhead on |Q|-bounded frames. cpEvery=N (r15
-    // verdict #6) still fuses N rounds into one lazy plan.
+    // pure scheduler overhead on |Q|-bounded frames.
     var state = cur.withColumn("exp", lit(false))
     val byLaneEf = Window.partitionBy("q_id", "lane")
       .orderBy(col("exp").asc, col("cos3").desc, col("c_id").asc)
-    val cpEvery = math.max(1, s.conf
-      .getOption("spark.graft.walk.cpEvery").map(_.toInt).getOrElse(1))
-    for (r <- 1 to rounds) {
-      val cp = r % cpEvery == 0 || r == rounds
+    for (_ <- 1 to rounds) {
       val ranked = state
         .join(broadcast(quotasL), Seq("q_id", "lane"), "left")
         .withColumn("rk", row_number().over(byLaneEf))
       val frontier = ranked
         .filter(!col("exp") && col("rk") <= col("quota"))
         .select("q_id", "c_id", "cos3", "lane")
-      state = maybeCp(ranked
+      state = cpState(ranked
         .select(col("q_id"), col("c_id"), col("cos3"), col("lane"),
           (col("exp") || col("rk") <= coalesce(col("quota"), lit(0L)))
             .as("exp"))
         .union(laneExpand(frontier, state, g0, q, cv)
-          .withColumn("exp", lit(false))), cp)
+          .withColumn("exp", lit(false))))
     }
     state
       .select("q_id", "c_id", "cos3").distinct()
@@ -1806,9 +1798,6 @@ object Similarity {
       .select(col("q_id"), col("rank"), col("c_id"), col("cos3").as("cos"))
       .orderBy("q_id", "rank")
   }
-
-  private def maybeCp(df: DataFrame, doIt: Boolean): DataFrame =
-    if (doIt) cpState(df) else df
 
   /** Materialize a walk-STATE pipeline with AQE off (r16 opt). Every
     * exchange in these plans carries |Q|-bounded walk state — the
@@ -1821,36 +1810,21 @@ object Similarity {
     * round materializes as ONE result job plus its broadcast builds.
     * Same plan shape otherwise (hints are plan-time); same rows —
     * the oracle and stored≡inline specs pin bit-equality. State
-    * partitions drop to `spark.graft.walk.statePartitions`
-    * (default 8): scale-honest because the state is |Q|-bounded BY
-    * CONSTRUCTION at any corpus size. Corpus-touching pipelines
-    * (index builds, seed shortlists) keep AQE untouched. */
+    * partitions drop to 8: scale-honest because the state is
+    * |Q|-bounded BY CONSTRUCTION at any corpus size. Corpus-touching
+    * pipelines (index builds, seed shortlists) keep AQE untouched. */
   private def cpState(df: DataFrame): DataFrame = {
     val conf = df.sparkSession.conf
     val aqe = conf.get("spark.sql.adaptive.enabled", "true")
     val parts = conf.get("spark.sql.shuffle.partitions")
     conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.shuffle.partitions",
-      conf.getOption("spark.graft.walk.statePartitions").getOrElse("8"))
+    conf.set("spark.sql.shuffle.partitions", "8")
     try df.localCheckpoint(true)
     finally {
       conf.set("spark.sql.adaptive.enabled", aqe)
       conf.set("spark.sql.shuffle.partitions", parts)
     }
   }
-
-  /** Broadcast hint for walk-STATE frames (frontier / visited /
-    * candidate sets). These are |Q|-bounded by construction, but they
-    * DO grow with |Q|·beam·degree·rounds, so the hint is conf-gated
-    * (ADVICE r15): `spark.graft.walk.broadcastState=false` drops the
-    * hints and lets Spark's size-based planning (and AQE) pick the
-    * join strategy — the safety net for an oversized query batch or
-    * a deep walk. Default on: at the contract's batch sizes the state
-    * is KBs and plan-time hash joins save one AQE exchange per use. */
-  private def hintState(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.getOption("spark.graft.walk.broadcastState")
-        .forall(_.toBoolean)) broadcast(df)
-    else df
 
   /** Collect a |Q|-BOUNDED constant frame into a LocalRelation
     * (r15 opt). The walk's query vectors and lane quotas are joined
@@ -1886,12 +1860,12 @@ object Similarity {
     // walk-state frames are |Q|-bounded at any scale — broadcast
     // them explicitly so only the corpus-sized graph/vector sides
     // stream (see expandFrontier's rationale, r15 opt)
-    val cand = hintState(frontier.select("q_id", "c_id", "lane"))
+    val cand = broadcast(frontier.select("q_id", "c_id", "lane"))
       .join(graph, col("c_id") === col("vec_id"))
       .select(col("q_id"), col("nbr").as("c_id"), col("lane")).distinct()
-      .join(hintState(visited.select("q_id", "c_id", "lane")),
+      .join(broadcast(visited.select("q_id", "c_id", "lane")),
         Seq("q_id", "c_id", "lane"), "left_anti")
-    hintState(cand)
+    broadcast(cand)
       .join(cv, "c_id")
       .join(broadcast(q), "q_id")
       .select(col("q_id"), col("c_id"),
@@ -2318,12 +2292,12 @@ object Similarity {
     // first shuffle and then convert (r15 opt — each avoided
     // exchange is one fewer AQE stage job per round, and the
     // corpus-sized graph/vector sides stream with no shuffle at all)
-    val cand = hintState(frontier)
+    val cand = broadcast(frontier)
       .join(graph, col("c_id") === col("vec_id"))
       .select(col("q_id"), col("nbr").as("c_id")).distinct()
-      .join(hintState(visited.select("q_id", "c_id")),
+      .join(broadcast(visited.select("q_id", "c_id")),
         Seq("q_id", "c_id"), "left_anti")
-    hintState(cand)
+    broadcast(cand)
       .join(cv, "c_id")
       .join(broadcast(q), "q_id")
       .select(col("q_id"), col("c_id"),

@@ -525,7 +525,7 @@ object EventStreamFold {
     * the merged view is unchanged; call at the deployment's
     * compaction schedule. */
   def compactState(s: SparkSession, root: String): Int =
-    Seq("open", "sess", "priv", "pubs", "align")
+    Seq("open", "priv", "pubs", "align")
       .map(sub => StoreFs.compactSlices(s, s"$root/$sub")).sum
 
   /** One persisted step of the folded SCD-2 cadence: reads the merged
@@ -541,21 +541,6 @@ object EventStreamFold {
       readWm(s, root, batchId), batch, retentionMs)
     val outC = out.localCheckpoint(true)
     writeDelta(s, s"$root/open", batchId, upserts, evictedKeys,
-      Seq("user_id"))
-    writeWm(s, root, batchId, wm)
-    outC
-  }
-
-  /** One persisted step of the folded sessionize cadence. */
-  def sessionStep(root: String, batchId: Long, batch: DataFrame,
-      gapMs: Long = 30L * 60 * 1000): DataFrame = {
-    val s = batch.sparkSession
-    val st = readDelta(s, root, "sess", batchId, emptySessionState(s),
-      Seq("user_id"))
-    val (out, upserts, evictedKeys, _, wm) = sessionFoldParts(st,
-      readWm(s, root, batchId), batch, gapMs)
-    val outC = out.localCheckpoint(true)
-    writeDelta(s, s"$root/sess", batchId, upserts, evictedKeys,
       Seq("user_id"))
     writeWm(s, root, batchId, wm)
     outC
@@ -595,16 +580,6 @@ object EventStreamFold {
     outC
   }
 
-  /** The folded align cadence as a foreachBatch writer — `events`
-    * carries StreamingAlign's (id, ts, side, value, seq). */
-  def alignFolded(events: DataFrame, root: String,
-      retentionMs: Long = 30L * 24 * 3600 * 1000)
-      (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
-    events.writeStream.foreachBatch { (b: Dataset[Row], id: Long) =>
-      sink(alignStep(root, id, b.toDF(), retentionMs), id)
-    }
-
   /** Streaming query glue: the folded SCD-2 cadence as a foreachBatch
     * writer — `events` carries [[EventStream.eventSchema]] columns;
     * each micro-batch's emitted rows go to `sink`. */
@@ -614,20 +589,6 @@ object EventStreamFold {
       : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
     events.writeStream.foreachBatch { (b: Dataset[Row], id: Long) =>
       sink(versionStep(root, id, b.toDF(), retentionMs), id)
-    }
-
-  def sessionizeFolded(events: DataFrame, root: String,
-      gapMs: Long = 30L * 60 * 1000)(sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
-    events.writeStream.foreachBatch { (b: Dataset[Row], id: Long) =>
-      sink(sessionStep(root, id, b.toDF(), gapMs), id)
-    }
-
-  def privacyDeletesFolded(events: DataFrame, root: String)
-      (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
-    events.writeStream.foreachBatch { (b: Dataset[Row], id: Long) =>
-      sink(privacyStep(root, id, b.toDF()), id)
     }
 
   /** Max event ts of the batch in epoch ms (one bounded 1-row

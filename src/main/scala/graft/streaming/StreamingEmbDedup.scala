@@ -268,12 +268,4 @@ object StreamingEmbDedup {
     (s"$root/hier/g0", (1 to levels).map(l => s"$root/hier/g$l"),
       s"$root/hier/atlas")
   }
-
-  /** Streaming query for the survivor cadence — requires a prior
-    * [[freezeSurvivorCells]] at `root`. */
-  def runSurvivors(embs: DataFrame, root: String, nb: Int = 64)
-      : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
-    embs.writeStream.foreachBatch { (b: Dataset[Row], id: Long) =>
-      survivorBatch(b.toDF(), id, root, nb)
-    }
 }

@@ -265,13 +265,4 @@ object StreamingKnn {
     embs.writeStream.foreachBatch { (b: Dataset[Row], id: Long) =>
       processBatch(b.toDF(), id, storePath, graphPath, k, nb)
     }
-
-  /** Streaming query under an explicit cadence (e.g.
-    * [[KnnGraphConfig.search]] for the maintained s15 graph). */
-  def runWith(embs: DataFrame, storePath: String, graphPath: String,
-      cfg: KnnGraphConfig)
-      : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
-    embs.writeStream.foreachBatch { (b: Dataset[Row], id: Long) =>
-      processBatch(b.toDF(), id, storePath, graphPath, cfg)
-    }
 }

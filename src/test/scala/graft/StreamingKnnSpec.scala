@@ -319,6 +319,19 @@ class StreamingKnnSpec extends AnyFunSuite {
     assert(reg.nonEmpty)
   }
 
+  test("the s15 and s16 walks leave the session's AQE and shuffle-" +
+      "partition settings as they found them (each round's state " +
+      "checkpoint runs with AQE off and 8 partitions, then restores)") {
+    val keys = Seq("spark.sql.adaptive.enabled",
+      "spark.sql.shuffle.partitions")
+    def settings = keys.map(k => k -> spark.conf.get(k)).toMap
+    val before = settings
+    for (q <- Seq("s15_graph_search", "s16_hnsw")) {
+      assert(SparkEntry.queries(q)(spark, sf).collect().nonEmpty)
+      assert(settings == before, s"$q changed the session's settings")
+    }
+  }
+
   test("s16WriteAtlas threads the level cap: a levels=4 deployment's " +
       "persisted atlas + stores walk identically to the inline " +
       "levels=4 build (atlas entry ordering depends on the cap)") {
