@@ -1,6 +1,8 @@
 #!/usr/bin/env python3
 """Local replica of the driver's correctness gate: compare Verify's
-parquet dumps against the DuckDB oracle SQL. Usage:
+parquet dumps against the DuckDB oracle SQL. An oracle key with no
+output (the query crashed in Verify) counts as a failure; exits 1 when
+anything failed. Usage:
   python3 check.py [sfdir] [outdir]
 """
 import json, sys, glob, os, gc
@@ -56,5 +58,9 @@ for name in sorted(os.listdir(outdir)):
     else:
         ok += 1
         print(f"{name:24s} OK ({len(got)} rows)")
-print(f"\n{ok} ok, {fail} fail, oracle keys without output: "
-      f"{sorted(set(oracle) - set(os.listdir(outdir)))}")
+missing = sorted(set(oracle) - set(os.listdir(outdir)))
+for name in missing:
+    print(f"{name:24s} FAIL: no output")
+fail += len(missing)
+print(f"\n{ok} ok, {fail} fail, oracle keys without output: {missing}")
+sys.exit(1 if fail else 0)

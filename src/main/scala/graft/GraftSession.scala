@@ -1,16 +1,21 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.Bridge
 
-/** Tuned SparkSession builder shared by the driver mains and any
-  * embedding application.
+/** The one place that decides which SQL settings a plan runs under:
+  * the session builder shared by the driver mains, the specs and any
+  * embedding application, and [[scoped]] for a block that needs others.
   *
   * Settings are the 100 TB defaults scaled to local mode: AQE with
   * skew-join splitting and partition coalescing (Spark 4 defaults,
   * asserted here so a misconfigured cluster profile can't silently
   * drop them), shuffle parallelism = core count locally (a cluster
   * deploy sets it to ~2-3x total executor cores), UTC session time
-  * (oracle parity), and graft's native SQL functions registered. */
+  * (oracle parity), graft's native SQL functions registered, and the
+  * parquet reads every [[Tables]] load relies on: naive timestamps as
+  * UTC timestamps like the DuckDB oracle (`inferTimestampNTZ.enabled`
+  * off), TIMESTAMP(NANOS) as raw longs (`nanosAsLong`). */
 object GraftSession {
 
   /** Default to the machine's cores (capped at 32, the target local
@@ -47,6 +52,11 @@ object GraftSession {
       // reshuffles both sides and the bucketing buys nothing
       .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // one artifact classloader for all sessions: a scoped clone then
+      // reuses its parent's generated code (else ~20 recompiles a walk)
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions)
       .getOrCreate()
@@ -57,4 +67,20 @@ object GraftSession {
       GraftExtensions.installInto(s)
     s
   }
+
+  /** Run `body` on a clone of `s` carrying `overrides`, as the thread's
+    * active session; `s` is never written, so a concurrent query on it
+    * keeps its settings. The clone shares the context, catalog, views
+    * and functions, and stays on the listener bus until collected:
+    * scope a loop, not each round. */
+  def scoped[T](s: SparkSession, overrides: (String, String)*)
+      (body: SparkSession => T): T = {
+    val c = Bridge.cloneSession(s)
+    overrides.foreach { case (k, v) => c.conf.set(k, v) }
+    Bridge.withActive(c)(body(c))
+  }
+
+  /** `df`'s plan as a frame of `s`, run under `s`'s settings. */
+  def on(s: SparkSession, df: DataFrame): DataFrame =
+    Bridge.ofRows(s, Bridge.plan(df))
 }

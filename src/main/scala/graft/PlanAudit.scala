@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 
 /** Dev tool: print the executed plan + wall time for named queries.
@@ -83,20 +84,8 @@ object PlanAudit {
         val b1 = System.nanoTime()
         d2.count()
         val b2 = System.nanoTime()
-        // listener bus is async; wait for the counters to go quiet —
-        // bounded (ADVICE r15): continuing listener-visible activity
-        // (a stray job, a streaming query) must not hang the audit
-        var prev = counter.snap
-        var stable = 0
-        var waited = 0
-        while (stable < 3 && waited < 200) {
-          Thread.sleep(50)
-          waited += 1
-          val cur = counter.snap
-          if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-        }
-        if (stable < 3) println(s"===== $name WARNING: listener still " +
-          "active after 10 s quiet-wait; counters may undercount =====")
+        // the listener bus is async: let this pass's events land
+        Bridge.drainListeners(spark)
         val (j1, s1, k1) = counter.snap
         println(f"===== $name pass$pass build=${(b1 - b0) / 1e9}%.2fs " +
           f"count=${(b2 - b1) / 1e9}%.2fs jobs=${j1 - j0} " +

@@ -8,15 +8,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (reference: bugzilla_etl/extract_bugzilla.py:238 get_bugs et al.)
   * re-expressed as lazy parquet scans so Catalyst can push filters and
   * prune columns down to the file source.
+  * Sessions must come from [[GraftSession.local]]; a load refuses any
+  * other rather than silently read naive timestamps as TIMESTAMP_NTZ.
   */
 object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // Read parquet TIMESTAMP(isAdjustedToUTC=false) as session-tz (UTC)
-    // timestamps — matches the DuckDB oracle's naive-timestamp reading —
-    // and admit TIMESTAMP(NANOS) columns (events.ts) as raw long nanos,
-    // normalized below.
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val c = spark.conf
+    require(c.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "false" &&
+      c.get("spark.sql.legacy.parquet.nanosAsLong") == "true",
+      "graft.Tables needs a session built by GraftSession.local " +
+        "(inferTimestampNTZ off, nanosAsLong on)")
     spark.read.parquet(s"$dir/$name.parquet")
   }
 
@@ -30,7 +31,7 @@ object Tables {
   /** events.ts has shipped as both TIMESTAMP(NANOS) and
     * TIMESTAMP(MICROS) across driver testdata generations; surface it
     * uniformly as a microsecond TimestampType. Nanos arrive as raw
-    * longs (legacy.parquet.nanosAsLong above) and get an integer
+    * longs (nanosAsLong, set by [[GraftSession.local]]) and get an integer
     * division — no double rounding; micros are already the target
     * type and pass through untouched. */
   def events(s: SparkSession, d: String): DataFrame = {

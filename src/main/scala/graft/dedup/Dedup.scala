@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.functions.{TextFunctions => T, VectorFunctions => V}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -1416,9 +1416,7 @@ object Dedup {
     // Scoped PER QUERY by repartitioning on the round's keys (hash
     // partitioning on `u` satisfies every downstream groupBy/join
     // ClusteredDistribution, so no second exchange appears) — NOT by
-    // mutating spark.sql.shuffle.partitions, which would re-plan any
-    // concurrent query on the shared session at the reduced
-    // parallelism and could race a concurrent save/restore.
+    // a session-wide spark.sql.shuffle.partitions.
     val s = e.sparkSession
     val sessionParallelism = s.conf.get("spark.sql.shuffle.partitions")
     val roundParallelism = math.max(1L,
@@ -1454,76 +1452,75 @@ object Dedup {
     // measured at 80 jobs ≈ 5 s for d10's 6 rounds on a 1.5k-edge
     // sf0.1 graph (PlanAudit r16). This is scale-independent
     // reasoning: at 100 TB the law raises roundParallelism, not the
-    // exchange count. Conf is restored after the loop.
-    def withAqeOff[T](body: => T): T = {
-      val prev = s.conf.get("spark.sql.adaptive.enabled", "true")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      try body finally s.conf.set("spark.sql.adaptive.enabled", prev)
-    }
-    while (!done && round < maxRounds) withAqeOff {
-      // large-star over the symmetrized neighborhood; the explicit
-      // u-hash repartition pins the round's parallelism and is reused
-      // by the aggregate and both joins below
-      val nbr = e.select(col("u"), col("v"))
-        .union(e.select(col("v").as("u"), col("u").as("v")))
-        .repartition(roundParallelism, col("u"))
-      val minN = nbr.groupBy("u").agg(min("v").as("mn"))
-        .select(col("u"), least(col("mn"), col("u")).as("m"))
-      // NOT distinct'd: duplicate (u, v) rows only fan the small-star
-      // join out by their multiplicity (bounded by band-collision
-      // dups), while a dedup here costs one more full exchange per
-      // round; small-star's own distinct canonicalizes the output
-      val large = nbr.filter(col("v") > col("u"))
-        .join(minN, "u")
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v"))
-        .repartition(roundParallelism, col("u"))
-      // small-star over the to-smaller orientation (u > v by canon)
-      val minS = large.groupBy("u").agg(min("v").as("m"))
-      val small = large.join(minS, "u")
-        .select(
-          // every smaller neighbor v and u itself point at m
-          explode(array(struct(col("v").as("a"), col("m").as("b")),
-            struct(col("u").as("a"), col("m").as("b")))).as("p"))
-        .select(greatest(col("p.a"), col("p.b")).as("u"),
-          least(col("p.a"), col("p.b")).as("v"))
-        .filter(col("u") =!= col("v"))
-        .repartition(roundParallelism, col("u"), col("v")).distinct()
-        .localCheckpoint(true)
-      // fixpoint: the canonical edge set stopped changing — digest
-      // compare first (one job), exact exceptAll only on digest match
-      val smallDigest = digest(small)
-      done = smallDigest == eDigest && small.exceptAll(e).isEmpty
-      if (done || smallDigest._1 <= setAsideEdges) {
-        e = small
-        eDigest = smallDigest
-      } else {
-        // settled-star detection on the round's output: member
-        // degree 1 everywhere, root degree = star size (so neither
-        // the root nor any member is referenced by any other edge)
-        val nodeDeg = small
-          .select(explode(array(col("u"), col("v"))).as("id"))
-          .groupBy("id").agg(count(lit(1)).as("deg"))
-        val rootOk = small
-          .join(nodeDeg.withColumnRenamed("id", "u")
-            .withColumnRenamed("deg", "du"), "u")
-          .groupBy("v").agg(count(lit(1)).as("sz"),
-            max("du").as("maxdu"))
-          .join(nodeDeg.withColumnRenamed("id", "v"), "v")
-          .filter(col("maxdu") === 1 && col("deg") === col("sz"))
-          .select(col("v"))
-        // the settled half is only read by the final union — its
-        // parents (small) are checkpointed, so defer it; the active
-        // half drives the next round and checkpoints now
-        settledParts += small.join(rootOk, Seq("v"), "left_semi")
-        e = small.join(rootOk, Seq("v"), "left_anti")
+    // exchange count. Scoped to one clone; the final union runs with AQE.
+    GraftSession.scoped(s, "spark.sql.adaptive.enabled" -> "false") { c =>
+      e = GraftSession.on(c, e)
+      while (!done && round < maxRounds) {
+        // large-star over the symmetrized neighborhood; the explicit
+        // u-hash repartition pins the round's parallelism and is reused
+        // by the aggregate and both joins below
+        val nbr = e.select(col("u"), col("v"))
+          .union(e.select(col("v").as("u"), col("u").as("v")))
+          .repartition(roundParallelism, col("u"))
+        val minN = nbr.groupBy("u").agg(min("v").as("mn"))
+          .select(col("u"), least(col("mn"), col("u")).as("m"))
+        // NOT distinct'd: duplicate (u, v) rows only fan the small-star
+        // join out by their multiplicity (bounded by band-collision
+        // dups), while a dedup here costs one more full exchange per
+        // round; small-star's own distinct canonicalizes the output
+        val large = nbr.filter(col("v") > col("u"))
+          .join(minN, "u")
+          .select(col("v").as("u"), col("m").as("v"))
+          .filter(col("u") =!= col("v"))
+          .repartition(roundParallelism, col("u"))
+        // small-star over the to-smaller orientation (u > v by canon)
+        val minS = large.groupBy("u").agg(min("v").as("m"))
+        val small = large.join(minS, "u")
+          .select(
+            // every smaller neighbor v and u itself point at m
+            explode(array(struct(col("v").as("a"), col("m").as("b")),
+              struct(col("u").as("a"), col("m").as("b")))).as("p"))
+          .select(greatest(col("p.a"), col("p.b")).as("u"),
+            least(col("p.a"), col("p.b")).as("v"))
+          .filter(col("u") =!= col("v"))
+          .repartition(roundParallelism, col("u"), col("v")).distinct()
           .localCheckpoint(true)
-        eDigest = digest(e)
-        done = eDigest._1 == 0L
+        // fixpoint: the canonical edge set stopped changing — digest
+        // compare first (one job), exact exceptAll only on digest match
+        val smallDigest = digest(small)
+        done = smallDigest == eDigest && small.exceptAll(e).isEmpty
+        if (done || smallDigest._1 <= setAsideEdges) {
+          e = small
+          eDigest = smallDigest
+        } else {
+          // settled-star detection on the round's output: member
+          // degree 1 everywhere, root degree = star size (so neither
+          // the root nor any member is referenced by any other edge)
+          val nodeDeg = small
+            .select(explode(array(col("u"), col("v"))).as("id"))
+            .groupBy("id").agg(count(lit(1)).as("deg"))
+          val rootOk = small
+            .join(nodeDeg.withColumnRenamed("id", "u")
+              .withColumnRenamed("deg", "du"), "u")
+            .groupBy("v").agg(count(lit(1)).as("sz"),
+              max("du").as("maxdu"))
+            .join(nodeDeg.withColumnRenamed("id", "v"), "v")
+            .filter(col("maxdu") === 1 && col("deg") === col("sz"))
+            .select(col("v"))
+          // the settled half is only read by the final union — its
+          // parents (small) are checkpointed, so defer it; the active
+          // half drives the next round and checkpoints now
+          settledParts += small.join(rootOk, Seq("v"), "left_semi")
+          e = small.join(rootOk, Seq("v"), "left_anti")
+            .localCheckpoint(true)
+          eDigest = digest(e)
+          done = eDigest._1 == 0L
+        }
+        round += 1
       }
-      round += 1
     }
-    val all = (settledParts :+ e).reduceLeft(_ unionAll _)
+    val all = (settledParts :+ e).map(GraftSession.on(s, _))
+      .reduceLeft(_ unionAll _)
       .localCheckpoint(true) // consumers: roots anti-join + the output
     val roots = all.select(col("v").as("id")).distinct()
       .join(all.select(col("u").as("id")).distinct(), Seq("id"), "left_anti")

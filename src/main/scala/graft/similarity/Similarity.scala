@@ -1,6 +1,6 @@
 package graft.similarity
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.functions.{VectorFunctions => V}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -1209,47 +1209,41 @@ object Similarity {
     * own query protocol. */
   private[graft] def s15WalkQC(q: DataFrame, cv: DataFrame,
       graph: DataFrame, k: Int, beam: Int, rounds: Int,
-      seedPlanes: Int = 4): DataFrame = {
-    // ONE state frame, ONE materialization per round (r15 opt). The
-    // old loop kept visited/expanded as separate frames and eagerly
-    // checkpointed frontier, expanded∪frontier, AND visited∪new every
-    // round — 3 full query pipelines per round, each fanned into 5-6
-    // AQE stage jobs, re-copying the whole accumulated state: the
-    // measured s15 invocation launched 58 Spark jobs for ~600 state
-    // rows (s16: 133), and the walk wall was job fixed-overhead, not
-    // data. Folding the expanded-set bookkeeping into an `exp` FLAG on
-    // the visited rows makes each round one checkpointed plan:
-    // ranking unexpanded rows first (exp ASC leads the window order,
-    // so row_number over all rows ranks the unexpanded prefix exactly
-    // as the old anti-join + window did), frontier = the top-beam
-    // unexpanded slice, flag update and expansion union in the same
-    // plan. Same rows, same total order, bit-identical output — the
-    // oracle and the stored≡inline specs pin it.
-    // |Q|-bounded constant query batch → LocalRelation (zero
-    // per-round broadcast-build jobs; see localize)
-    val lq = localize(q)
-    var state = lshShortlistQC(lq, cv, beam, seedPlanes)
-      .withColumn("exp", lit(false))
-      .localCheckpoint(true)
-    val byQueryEf = Window.partitionBy("q_id")
-      .orderBy(col("exp").asc, col("cos3").desc, col("c_id").asc)
-    for (_ <- 1 to rounds) {
-      val ranked = state.withColumn("rk", row_number().over(byQueryEf))
-      val frontier = ranked
-        .filter(!col("exp") && col("rk") <= beam)
-        .select("q_id", "c_id")
-      state = cpState(ranked
-        .select(col("q_id"), col("c_id"), col("cos3"),
-          (col("exp") || col("rk") <= beam).as("exp"))
-        .union(expandFrontier(frontier, state, graph, lq, cv)
-          .withColumn("exp", lit(false))))
+      seedPlanes: Int = 4): DataFrame =
+    GraftSession.scoped(q.sparkSession, walkState: _*) { c =>
+      // ONE state frame, ONE materialization per round (r15 opt):
+      // separate visited/expanded frames cost 3 eager pipelines per
+      // round (58 jobs per s15 walk for ~600 state rows, s16: 133).
+      // An `exp` FLAG on the visited rows, leading the window order,
+      // ranks the unexpanded prefix exactly as an anti-join + window
+      // would, so frontier (the top-beam unexpanded slice), flag update
+      // and expansion union form one checkpointed plan. Bit-identical
+      // output — the oracle and the stored≡inline specs pin it.
+      // |Q|-bounded constant query batch → LocalRelation (zero
+      // per-round broadcast-build jobs; see localize)
+      val lq = localize(q)
+      var state = lshShortlistQC(lq, cv, beam, seedPlanes)
+        .withColumn("exp", lit(false))
+        .localCheckpoint(true)
+      val byQueryEf = Window.partitionBy("q_id")
+        .orderBy(col("exp").asc, col("cos3").desc, col("c_id").asc)
+      for (_ <- 1 to rounds) {
+        val ranked = state.withColumn("rk", row_number().over(byQueryEf))
+        val frontier = ranked
+          .filter(!col("exp") && col("rk") <= beam)
+          .select("q_id", "c_id")
+        state = cpState(c)(ranked
+          .select(col("q_id"), col("c_id"), col("cos3"),
+            (col("exp") || col("rk") <= beam).as("exp"))
+          .union(expandFrontier(frontier, state, graph, lq, cv)
+            .withColumn("exp", lit(false))))
+      }
+      state
+        .withColumn("rank", row_number().over(byQuery).cast("long"))
+        .filter(col("rank") <= k)
+        .select(col("q_id"), col("rank"), col("c_id"), col("cos3").as("cos"))
+        .orderBy("q_id", "rank")
     }
-    state
-      .withColumn("rank", row_number().over(byQuery).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("c_id"), col("cos3").as("cos"))
-      .orderBy("q_id", "rank")
-  }
 
   /** S16: HIERARCHICAL navigable-small-world search (HNSW — Malkov &
     * Yashunin 2016, "Efficient and robust approximate nearest
@@ -1666,165 +1660,146 @@ object Similarity {
   private[graft] def s16Walk(s: SparkSession, d: String, g0: DataFrame,
       upperGraphs: Seq[DataFrame], k: Int, beam: Int, rounds: Int,
       upperRounds: Int, descentBeam: Int = 4,
-      entry: Option[DataFrame] = None): DataFrame = {
-    val levels = upperGraphs.size
-    val emb = Tables.embeddings(s, d).filter(col("vec_id") >= 10)
-    val lvl = emb.withColumn("level", levelOf(col("vec_id"), levels))
-    // the query batch is a |Q|-bounded constant joined into every
-    // descent and layer-0 round — one LocalRelation, zero per-round
-    // broadcast-build jobs / embeddings re-scans (see localize)
-    val q = localize(queries(s, d))
-    val cv = corpus(s, d).select(col("c_id"), col("c_emb"))
-    // The ENTRY ATLAS ([[entryAtlas]] — why it exists and what each
-    // piece buys is measured at the [[s16Hnsw]] scaladoc): a pure
-    // function of g0, so a maintained deployment passes the
-    // PERSISTED atlas ([[s16WriteAtlas]], refreshed at the layer
-    // fold cadence) and this walk touches no corpus-sized
-    // computation at all; the inline forms derive it here.
-    val atlas = entry.getOrElse(entryAtlas(lvl, compsOf(g0)))
-    // Seed the best entry per COMPONENT (top-`descentBeam` components
-    // by score) PLUS the largest component's best entry always — not
-    // the top-4 entries overall. Components are reachability classes,
-    // so beam slots spent on two entries of one component are
-    // redundant, while the measured failure mode (30× diag) is a
-    // query whose per-comp scores mislead: entries are cosine-blind
-    // samples, and small sharp components (near-dup chains) can
-    // outscore every SAMPLE of the giant organic component that
-    // holds all the true neighbors — ranked overall, half the
-    // queries never seeded the giant at all. The mass seed guarantees
-    // the component holding most of the corpus is always explored.
-    //
-    // Each seed opens a LANE (lane id = the seed's component), and
-    // ALL walk state below is per (q_id, lane): the descent keeps the
-    // best candidate per lane, the layer-0 rounds run an ef-style
-    // top-`laneBeam`-UNEXPANDED-per-lane frontier, and only the final
-    // re-rank is global. Without lanes the 30× diag measured recall 0
-    // with a 1.00 seed ceiling: a sharp near-dup chain outscores the
-    // organic mass everywhere (cos 0.4+ vs an entry's 0.3), so a
-    // GLOBAL beam spends every slot on exhausted chain members and
-    // the giant component's ascending path never expands — at 100 TB
-    // that is precisely a dup-cluster starving the organic corpus.
-    // Expanded-tracking is ef-search's other half: an exhausted
-    // region stops occupying frontier slots instead of pinning them
-    // forever.
-    val seeds = broadcast(atlas).join(cv, "c_id")
-      .crossJoin(broadcast(q))
-      .select(col("q_id"), col("c_id"), col("comp"), col("csize"),
-        round(V.cosine(col("q_emb"), col("c_emb")), 3).as("cos3"))
-      .withColumn("rc", row_number().over(
-        Window.partitionBy("q_id", "comp")
-          .orderBy(col("cos3").desc, col("c_id").asc)))
-      .filter(col("rc") === 1)
-      .withColumn("rk", row_number().over(byQuery))
-      .withColumn("rs", row_number().over(Window.partitionBy("q_id")
-        .orderBy(col("csize").desc, col("comp").asc)))
-      .filter(col("rk") <= descentBeam || col("rs") === 1)
-      .transform(cpState) // consumers: the walk state AND the quotas;
-      // bounded pipeline (|atlas|·|Q| rows, cv streams) — see cpState
-    var cur = seeds.select(col("q_id"), col("c_id"), col("cos3"),
-      col("comp").as("lane"))
-    // MASS-PROPORTIONAL frontier quotas: each lane's share of the
-    // `beam` expansion budget ∝ its component's size (integer `div`,
-    // floor 1 — exact in both engines). The corpus's answers live
-    // where its mass lives: the giant organic component takes
-    // essentially the whole beam, while a 29-member dup chain keeps
-    // one slot — enough to surface its best member, which the seed
-    // round already scored. A flat per-lane split measured 4× worse
-    // giant-lane conversion at 30× (9 vs 36 expansions).
-    val quotas = seeds
-      .select(col("q_id"), col("comp").as("lane"), col("csize"))
-      .withColumn("tot", sum("csize").over(Window.partitionBy("q_id")))
-      .withColumn("quota",
-        greatest(lit(1L), expr(s"($beam * csize) div tot")))
-      .select("q_id", "lane", "quota")
-    // |Q|·lanes rows, joined by every layer-0 round: LocalRelation
-    // (zero per-round broadcast-build jobs), not a checkpoint
-    val quotasL = localize(quotas)
-    val byLane = Window.partitionBy("q_id", "lane")
-      .orderBy(col("cos3").desc, col("c_id").asc)
-    // descent: expand every lane head through the upper layer, keep
-    // the best candidate per lane (upper-layer bands are narrower
-    // than g0's, so a hop may leave the lane's g0 component — the
-    // long-range links the hierarchy exists for; the lane TAG stays,
-    // only layer-0 edges confine). Checkpoint per ROUND, not per
-    // layer (r15 opt): the per-lane state is referenced 3× per step,
-    // so a layer's two lazy rounds grew the subtree ~9× — trivial to
-    // COMPUTE, but every descent stage's task binary serializes that
-    // whole tree (shared subtrees are distinct objects to the Java
-    // serializer), and the walk's stages were shipping 2-6 MiB task
-    // binaries per job — driver serialize + per-task deserialize was
-    // a large slice of the walk wall. Per-round checkpoints keep the
-    // serialized plan one round deep.
-    for (l <- levels to 1 by -1) {
-      for (_ <- 1 to upperRounds)
-        cur = cpState(cur
-          .union(laneExpand(cur, cur, upperGraphs(l - 1), q, cv))
-          .withColumn("rk", row_number().over(byLane))
-          .filter(col("rk") <= descentBeam)
-          .select("q_id", "c_id", "cos3", "lane"))
+      entry: Option[DataFrame] = None): DataFrame =
+    GraftSession.scoped(s, walkState: _*) { c =>
+      val levels = upperGraphs.size
+      val emb = Tables.embeddings(s, d).filter(col("vec_id") >= 10)
+      val lvl = emb.withColumn("level", levelOf(col("vec_id"), levels))
+      // the query batch is a |Q|-bounded constant joined into every
+      // descent and layer-0 round — one LocalRelation, zero per-round
+      // broadcast-build jobs / embeddings re-scans (see localize)
+      val q = localize(queries(s, d))
+      val cv = corpus(s, d).select(col("c_id"), col("c_emb"))
+      // The ENTRY ATLAS ([[entryAtlas]] — why it exists and what each
+      // piece buys is measured at the [[s16Hnsw]] scaladoc): a pure
+      // function of g0, so a maintained deployment passes the
+      // PERSISTED atlas ([[s16WriteAtlas]], refreshed at the layer
+      // fold cadence) and this walk touches no corpus-sized
+      // computation at all; the inline forms derive it here.
+      val atlas = entry.getOrElse(entryAtlas(lvl, compsOf(g0)))
+      // Seed the best entry per COMPONENT (top-`descentBeam` components
+      // by score) PLUS the largest component's best entry always — not
+      // the top-4 entries overall. Components are reachability classes,
+      // so beam slots spent on two entries of one component are
+      // redundant, while the measured failure mode (30× diag) is a
+      // query whose per-comp scores mislead: entries are cosine-blind
+      // samples, and small sharp components (near-dup chains) can
+      // outscore every SAMPLE of the giant organic component that
+      // holds all the true neighbors — ranked overall, half the
+      // queries never seeded the giant at all. The mass seed guarantees
+      // the component holding most of the corpus is always explored.
+      //
+      // Each seed opens a LANE (lane id = the seed's component), and
+      // ALL walk state below is per (q_id, lane): the descent keeps the
+      // best candidate per lane, the layer-0 rounds run an ef-style
+      // top-`laneBeam`-UNEXPANDED-per-lane frontier, and only the final
+      // re-rank is global. Without lanes the 30× diag measured recall 0
+      // with a 1.00 seed ceiling: a sharp near-dup chain outscores the
+      // organic mass everywhere (cos 0.4+ vs an entry's 0.3), so a
+      // GLOBAL beam spends every slot on exhausted chain members and
+      // the giant component's ascending path never expands — at 100 TB
+      // that is precisely a dup-cluster starving the organic corpus.
+      // Expanded-tracking is ef-search's other half: an exhausted
+      // region stops occupying frontier slots instead of pinning them
+      // forever.
+      val seeds = broadcast(atlas).join(cv, "c_id")
+        .crossJoin(broadcast(q))
+        .select(col("q_id"), col("c_id"), col("comp"), col("csize"),
+          round(V.cosine(col("q_emb"), col("c_emb")), 3).as("cos3"))
+        .withColumn("rc", row_number().over(
+          Window.partitionBy("q_id", "comp")
+            .orderBy(col("cos3").desc, col("c_id").asc)))
+        .filter(col("rc") === 1)
+        .withColumn("rk", row_number().over(byQuery))
+        .withColumn("rs", row_number().over(Window.partitionBy("q_id")
+          .orderBy(col("csize").desc, col("comp").asc)))
+        .filter(col("rk") <= descentBeam || col("rs") === 1)
+        .transform(cpState(c)) // consumers: the walk state AND the quotas;
+        // bounded pipeline (|atlas|·|Q| rows, cv streams) — see cpState
+      var cur = seeds.select(col("q_id"), col("c_id"), col("cos3"),
+        col("comp").as("lane"))
+      // MASS-PROPORTIONAL frontier quotas: each lane's share of the
+      // `beam` expansion budget ∝ its component's size (integer `div`,
+      // floor 1 — exact in both engines). The corpus's answers live
+      // where its mass lives: the giant organic component takes
+      // essentially the whole beam, while a 29-member dup chain keeps
+      // one slot — enough to surface its best member, which the seed
+      // round already scored. A flat per-lane split measured 4× worse
+      // giant-lane conversion at 30× (9 vs 36 expansions).
+      val quotas = seeds
+        .select(col("q_id"), col("comp").as("lane"), col("csize"))
+        .withColumn("tot", sum("csize").over(Window.partitionBy("q_id")))
+        .withColumn("quota",
+          greatest(lit(1L), expr(s"($beam * csize) div tot")))
+        .select("q_id", "lane", "quota")
+      // |Q|·lanes rows, joined by every layer-0 round: LocalRelation
+      // (zero per-round broadcast-build jobs), not a checkpoint
+      val quotasL = localize(quotas)
+      val byLane = Window.partitionBy("q_id", "lane")
+        .orderBy(col("cos3").desc, col("c_id").asc)
+      // descent: expand every lane head through the upper layer, keep
+      // the best candidate per lane (upper-layer bands are narrower
+      // than g0's, so a hop may leave the lane's g0 component — the
+      // long-range links the hierarchy exists for; the lane TAG stays,
+      // only layer-0 edges confine). Checkpoint per ROUND, not per
+      // layer (r15 opt): the per-lane state is referenced 3× per step,
+      // so a layer's two lazy rounds grew the subtree ~9× — trivial to
+      // COMPUTE, but every descent stage's task binary serializes that
+      // whole tree (shared subtrees are distinct objects to the Java
+      // serializer), and the walk's stages were shipping 2-6 MiB task
+      // binaries per job — driver serialize + per-task deserialize was
+      // a large slice of the walk wall. Per-round checkpoints keep the
+      // serialized plan one round deep.
+      for (l <- levels to 1 by -1) {
+        for (_ <- 1 to upperRounds)
+          cur = cpState(c)(cur
+            .union(laneExpand(cur, cur, upperGraphs(l - 1), q, cv))
+            .withColumn("rk", row_number().over(byLane))
+            .filter(col("rk") <= descentBeam)
+            .select("q_id", "c_id", "cos3", "lane"))
+      }
+      // ONE state frame, ONE materialization per round: the same
+      // `exp`-flag fold as s15WalkQC, with the lane key in the window
+      // and the quota budgets as the per-lane frontier width.
+      var state = cur.withColumn("exp", lit(false))
+      val byLaneEf = Window.partitionBy("q_id", "lane")
+        .orderBy(col("exp").asc, col("cos3").desc, col("c_id").asc)
+      for (_ <- 1 to rounds) {
+        val ranked = state
+          .join(broadcast(quotasL), Seq("q_id", "lane"), "left")
+          .withColumn("rk", row_number().over(byLaneEf))
+        val frontier = ranked
+          .filter(!col("exp") && col("rk") <= col("quota"))
+          .select("q_id", "c_id", "cos3", "lane")
+        state = cpState(c)(ranked
+          .select(col("q_id"), col("c_id"), col("cos3"), col("lane"),
+            (col("exp") || col("rk") <= coalesce(col("quota"), lit(0L)))
+              .as("exp"))
+          .union(laneExpand(frontier, state, g0, q, cv)
+            .withColumn("exp", lit(false))))
+      }
+      state
+        .select("q_id", "c_id", "cos3").distinct()
+        .withColumn("rank", row_number().over(byQuery).cast("long"))
+        .filter(col("rank") <= k)
+        .select(col("q_id"), col("rank"), col("c_id"), col("cos3").as("cos"))
+        .orderBy("q_id", "rank")
     }
-    // ONE state frame, ONE materialization per round (r15 opt — the
-    // same fold as s15WalkQC, with the lane key and quota budgets):
-    // the expanded-set bookkeeping becomes an `exp` flag, exp ASC
-    // leads the per-lane window order so row_number ranks the
-    // unexpanded prefix exactly as the old anti-join + window did,
-    // and frontier selection, flag update and lane expansion land in
-    // one checkpointed plan. The old loop's 3 eager pipelines per
-    // round (frontier, expanded∪frontier, visited∪new) re-copied the
-    // whole accumulated walk state and fanned into ~15 AQE stage
-    // jobs per round — 133 Spark jobs per stored-walk invocation,
-    // pure scheduler overhead on |Q|-bounded frames.
-    var state = cur.withColumn("exp", lit(false))
-    val byLaneEf = Window.partitionBy("q_id", "lane")
-      .orderBy(col("exp").asc, col("cos3").desc, col("c_id").asc)
-    for (_ <- 1 to rounds) {
-      val ranked = state
-        .join(broadcast(quotasL), Seq("q_id", "lane"), "left")
-        .withColumn("rk", row_number().over(byLaneEf))
-      val frontier = ranked
-        .filter(!col("exp") && col("rk") <= col("quota"))
-        .select("q_id", "c_id", "cos3", "lane")
-      state = cpState(ranked
-        .select(col("q_id"), col("c_id"), col("cos3"), col("lane"),
-          (col("exp") || col("rk") <= coalesce(col("quota"), lit(0L)))
-            .as("exp"))
-        .union(laneExpand(frontier, state, g0, q, cv)
-          .withColumn("exp", lit(false))))
-    }
-    state
-      .select("q_id", "c_id", "cos3").distinct()
-      .withColumn("rank", row_number().over(byQuery).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("c_id"), col("cos3").as("cos"))
-      .orderBy("q_id", "rank")
-  }
 
-  /** Materialize a walk-STATE pipeline with AQE off (r16 opt). Every
-    * exchange in these plans carries |Q|-bounded walk state — the
-    * corpus-sized graph/vector sides enter only as the streamed
-    * probe of plan-time broadcast hash joins and never shuffle — so
-    * AQE buys nothing (nothing to coalesce or skew-split) while
-    * charging one scheduler job per exchange per round: the stored
-    * s16 walk measured 117 jobs ≈ 1 task each, 7.7 s of pure
-    * stage-job overhead at sf0.1 (PlanAudit r16). With AQE off a
-    * round materializes as ONE result job plus its broadcast builds.
-    * Same plan shape otherwise (hints are plan-time); same rows —
-    * the oracle and stored≡inline specs pin bit-equality. State
-    * partitions drop to 8: scale-honest because the state is
-    * |Q|-bounded BY CONSTRUCTION at any corpus size. Corpus-touching
-    * pipelines (index builds, seed shortlists) keep AQE untouched. */
-  private def cpState(df: DataFrame): DataFrame = {
-    val conf = df.sparkSession.conf
-    val aqe = conf.get("spark.sql.adaptive.enabled", "true")
-    val parts = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.shuffle.partitions", "8")
-    try df.localCheckpoint(true)
-    finally {
-      conf.set("spark.sql.adaptive.enabled", aqe)
-      conf.set("spark.sql.shuffle.partitions", parts)
-    }
-  }
+  /** Materialize a walk-STATE pipeline on the walk's scoped session
+    * `c` ([[walkState]]: AQE off, 8 partitions; r16 opt) and move the
+    * checkpoint back. The state is |Q|-bounded (corpus sides are only
+    * streamed probes of broadcast joins), so AQE only adds a job per
+    * exchange per round: 117 jobs, 7.7 s for the stored s16 walk at
+    * sf0.1 (PlanAudit r16); without it a round is ONE result job plus
+    * its broadcast builds. Corpus-touching pipelines keep AQE. */
+  private def cpState(c: SparkSession)(df: DataFrame): DataFrame =
+    GraftSession.on(df.sparkSession,
+      GraftSession.on(c, df).localCheckpoint(true))
+
+  private val walkState = Seq(
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.shuffle.partitions" -> "8")
 
   /** Collect a |Q|-BOUNDED constant frame into a LocalRelation
     * (r15 opt). The walk's query vectors and lane quotas are joined

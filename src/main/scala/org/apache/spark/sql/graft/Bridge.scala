@@ -1,7 +1,8 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Column ⇄ Expression bridge for graft's native Catalyst expressions.
@@ -13,13 +14,19 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  def plan(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
-    df.queryExecution.analyzed
+  def plan(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
 
-  def ofRows(spark: org.apache.spark.sql.SparkSession,
-      p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : org.apache.spark.sql.DataFrame =
-    org.apache.spark.sql.classic.Dataset.ofRows(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], p)
+  def ofRows(spark: SparkSession, p: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(asClassic(spark), p)
+
+  def cloneSession(s: SparkSession): SparkSession = asClassic(s).cloneSession()
+
+  def withActive[T](spark: SparkSession)(body: => T): T =
+    asClassic(spark).withActive(body)
+
+  /** Block until every event posted so far reached every listener. */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  private def asClassic(s: SparkSession) = s.asInstanceOf[classic.SparkSession]
 }

@@ -296,14 +296,13 @@ class BugHistorySpec extends AnyFunSuite {
       .toJSON.collect()
     val plain2 = operators.HistoryDriver.b2NestedHistory(spark, SparkTest.sf)
       .toJSON.collect()
-    spark.conf.set(operators.SegmentFold.ThresholdConf, "5")
-    try {
-      val seg1 = operators.HistoryDriver.b1BugHistory(spark, SparkTest.sf)
+    GraftSession.scoped(spark, operators.SegmentFold.ThresholdConf -> "5") { c =>
+      val seg1 = operators.HistoryDriver.b1BugHistory(c, SparkTest.sf)
         .toJSON.collect()
-      val seg2 = operators.HistoryDriver.b2NestedHistory(spark, SparkTest.sf)
+      val seg2 = operators.HistoryDriver.b2NestedHistory(c, SparkTest.sf)
         .toJSON.collect()
       assert(seg1.length == plain1.length && seg1.sameElements(plain1))
       assert(seg2.length == plain2.length && seg2.sameElements(plain2))
-    } finally spark.conf.unset(operators.SegmentFold.ThresholdConf)
+    }
   }
 }

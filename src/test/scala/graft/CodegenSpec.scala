@@ -12,11 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class CodegenSpec extends AnyFunSuite {
   import SparkTest._
 
-  private def withStrictCodegen[A](f: => A): A = {
-    val prev = spark.conf.get("spark.sql.codegen.fallback", "true")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try f finally spark.conf.set("spark.sql.codegen.fallback", prev)
-  }
+  private def withStrictCodegen[A](f: org.apache.spark.sql.SparkSession => A): A =
+    GraftSession.scoped(spark, "spark.sql.codegen.fallback" -> "false")(f)
 
   test("minhash + simhash codegen paths compile and match interpreted eval") {
     import org.apache.spark.sql.catalyst.expressions.Literal
@@ -31,8 +28,8 @@ class CodegenSpec extends AnyFunSuite {
       "aaaa aaaa aaaa"
     )
     val k = 16
-    val rows = withStrictCodegen {
-      spark.createDataFrame(docs.map(Tuple1(_))).toDF("text")
+    val rows = withStrictCodegen { c =>
+      c.createDataFrame(docs.map(Tuple1(_))).toDF("text")
         .select(
           T.minhashSignature(T.shingleSet(col("text"), 5), k).as("mh"),
           T.simhash(T.tokenSet(col("text"))).as("sh"))
@@ -62,8 +59,8 @@ class CodegenSpec extends AnyFunSuite {
 
   test("shingle_set handles non-ASCII input by characters, like the columnar form") {
     val docs = Seq("héllo wörld ünïcode", "日本語のテキストです", "mixed 漢字 and ascii")
-    val rows = withStrictCodegen {
-      spark.createDataFrame(docs.map(Tuple1(_))).toDF("text")
+    val rows = withStrictCodegen { c =>
+      c.createDataFrame(docs.map(Tuple1(_))).toDF("text")
         .select(sort_array(T.shingleSet(col("text"), 5)).as("native"),
           sort_array(array_distinct(T.shingles(col("text"), 5))).as("columnar"))
         .collect()
@@ -77,8 +74,8 @@ class CodegenSpec extends AnyFunSuite {
   test("native vec_dot equals the HOF formulation bit-for-bit") {
     import graft.functions.{VectorFunctions => V}
     val e = Tables.embeddings(spark, sf).limit(200)
-    val rows = withStrictCodegen {
-      e.select(
+    val rows = withStrictCodegen { c =>
+      GraftSession.on(c, e).select(
         V.dot(V.asDouble(col("embedding")), V.asDouble(col("embedding"))).as("native"),
         V.dotHof(V.asDouble(col("embedding")), V.asDouble(col("embedding"))).as("hof"),
         V.dot(col("embedding"), col("embedding")).as("native_float"))
@@ -99,8 +96,8 @@ class CodegenSpec extends AnyFunSuite {
       "日本語のテキストです",
       "tiny",
       "")
-    val rows = withStrictCodegen {
-      spark.createDataFrame(docs.map(Tuple1(_))).toDF("text")
+    val rows = withStrictCodegen { c =>
+      c.createDataFrame(docs.map(Tuple1(_))).toDF("text")
         .select(
           T.minhashSignatureText(col("text"), 5, 16).as("fused"),
           T.minhashSignature(T.shingleSet(col("text"), 5), 16).as("staged"))
@@ -119,8 +116,8 @@ class CodegenSpec extends AnyFunSuite {
       "trailing ", // trailing separator -> trailing empty token
       "héllo wörld héllo", // multi-byte
       "") // empty string -> one empty token
-    val rows = withStrictCodegen {
-      spark.createDataFrame(docs.map(Tuple1(_))).toDF("text")
+    val rows = withStrictCodegen { c =>
+      c.createDataFrame(docs.map(Tuple1(_))).toDF("text")
         .select(
           T.simhashText(col("text")).as("fused"),
           T.simhash(T.tokenSet(col("text"))).as("staged"))
@@ -132,8 +129,8 @@ class CodegenSpec extends AnyFunSuite {
         s"fused/staged simhash mismatch for '$text'")
     }
     // and on the corpus itself
-    val corpus = withStrictCodegen {
-      Tables.documents(spark, sf)
+    val corpus = withStrictCodegen { c =>
+      Tables.documents(c, sf)
         .select(T.simhashText(col("text")).as("fused"),
           T.simhash(T.tokenSet(col("text"))).as("staged"))
         .collect()
@@ -150,8 +147,8 @@ class CodegenSpec extends AnyFunSuite {
     val e = Tables.embeddings(spark, sf).limit(200)
       .select(V.asDouble(col("embedding")).as("a"))
       .withColumn("b", transform(col("a"), x => x * 1.5 - 0.25))
-    val rows = withStrictCodegen {
-      e.select(
+    val rows = withStrictCodegen { c =>
+      GraftSession.on(c, e).select(
         V.l2(col("a"), col("b")).as("native"),
         V.l2Hof(col("a"), col("b")).as("hof"),
         V.l2(col("a"), col("a")).as("self")).collect()
@@ -169,8 +166,8 @@ class CodegenSpec extends AnyFunSuite {
       .select(T.minhashSignature(T.shingleSet(col("text"), 5), 16).as("s1"),
         T.minhashSignature(T.shingleSet(concat(col("text"), lit(" x")), 5), 16)
           .as("s2"))
-    val rows = withStrictCodegen {
-      sigs.select(
+    val rows = withStrictCodegen { c =>
+      GraftSession.on(c, sigs).select(
         T.minhashJaccardEst(col("s1"), col("s2"), 16).as("native"),
         T.minhashJaccardEstHof(col("s1"), col("s2"), 16).as("hof"),
         T.minhashJaccardEst(col("s1"), col("s1"), 16).as("self"))
@@ -190,8 +187,8 @@ class CodegenSpec extends AnyFunSuite {
         |  array(1.0D, 2.0D, 3.0D) AS b,
         |  array(1L, CAST(NULL AS BIGINT), 3L) AS s1,
         |  array(1L, CAST(NULL AS BIGINT), 9L) AS s2""".stripMargin)
-    val r = withStrictCodegen {
-      df.select(
+    val r = withStrictCodegen { c =>
+      GraftSession.on(c, df).select(
         V.dot(col("a"), col("b")).as("native"),
         V.dotHof(col("a"), col("b")).as("hof"),
         T.minhashJaccardEst(col("s1"), col("s2"), 3).as("agree_native"),
@@ -290,8 +287,8 @@ class CodegenSpec extends AnyFunSuite {
     // rank order — the per-rule form t16 uses
     val chained = rules.foldLeft(col("toks")) { case (c, (l, r)) =>
       T.bpeMergeApply(c, lit(l), lit(r)) }
-    val rows = withStrictCodegen {
-      Tables.documents(spark, sf).filter(col("text").isNotNull)
+    val rows = withStrictCodegen { c =>
+      Tables.documents(c, sf).filter(col("text").isNotNull)
         .select(T.tokens(col("text")).as("toks"))
         .select(T.bpeEncodeAll(col("toks"), ruleArr).as("one"),
           chained.as("replay"))

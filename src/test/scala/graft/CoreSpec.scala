@@ -4,17 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+/** Every spec's session: the production profile at four task slots.
+  * Other settings come only from [[GraftSession.scoped]]. */
 object SparkTest {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local("4")
+  /** Overrides that surface the shuffle-path plan a 100 TB input runs. */
+  val noBroadcast = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
   val sf: String = "/root/testdata/sf0.001"
 }
 

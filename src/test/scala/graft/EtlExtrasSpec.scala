@@ -180,15 +180,14 @@ class EtlExtrasSpec extends AnyFunSuite {
     plain.collect()
     assert(!sources.Bucketed.shuffleFree(plain), "unbucketed agg must shuffle")
 
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = t.as("a").join(t.as("b"), "user_id")
+    GraftSession.scoped(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") { c =>
+      val tc = sources.Bucketed.read(c, "graft_ev_bucketed")
+      val joined = tc.as("a").join(tc.as("b"), "user_id")
         .groupBy("user_id").agg(count(lit(1)).as("pairs"))
       joined.collect()
       assert(sources.Bucketed.shuffleFree(joined),
         "bucketed self-join + agg should not shuffle")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("replicate: split incremental runs copy exactly what one run would") {

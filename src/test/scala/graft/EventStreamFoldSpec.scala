@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -271,14 +271,15 @@ class EventStreamFoldSpec extends AnyFunSuite {
         1L + i % 7, if (i % 4 == 0) "error" else "view", i / 3.0))
     val batch = toBatch(whale ++ small)
 
-    def all3(): (Set[Any], Set[Any], Set[Any]) = {
+    def all3(s: SparkSession): (Set[Any], Set[Any], Set[Any]) = {
+      val b = GraftSession.on(s, batch)
       val (v, vo, _) = EventStreamFold.versionFoldBatch(
-        EventStreamFold.emptyVersionState(spark), 0L, batch)
+        EventStreamFold.emptyVersionState(s), 0L, b)
       val (se, so, _) = EventStreamFold.sessionFoldBatch(
-        EventStreamFold.emptySessionState(spark), 0L, batch)
+        EventStreamFold.emptySessionState(s), 0L, b)
       val (p, pp, pb, _) = EventStreamFold.privacyFoldBatch(
-        EventStreamFold.emptyPrivState(spark),
-        EventStreamFold.emptyPubState(spark), 0L, batch)
+        EventStreamFold.emptyPrivState(s),
+        EventStreamFold.emptyPubState(s), 0L, b)
       def rows(df: org.apache.spark.sql.DataFrame, tag: String): Set[Any] =
         df.collect().map(r => (tag, r.toSeq): Any).toSet
       (rows(v, "out") ++ rows(vo, "st"),
@@ -286,19 +287,18 @@ class EventStreamFoldSpec extends AnyFunSuite {
         rows(p, "out") ++ rows(pp, "pv") ++ rows(pb, "pb"))
     }
 
-    val plain = all3()
-    spark.conf.set(operators.SegmentFold.ThresholdConf, "4096")
-    try {
+    val plain = all3(spark)
+    GraftSession.scoped(spark, operators.SegmentFold.ThresholdConf -> "4096") { c =>
       // the gate must actually fire at this threshold
       val b = operators.SegmentFold.boundsFor(
         batch.select(col("user_id"), unix_millis(col("ts")).as("ts_ms")),
         "user_id", "ts_ms", 4096L)
       assert(b.isDefined, "whale gate did not fire")
-      val folded = all3()
+      val folded = all3(c)
       assert(folded._1 == plain._1, "versionFoldBatch diverged under fold")
       assert(folded._2 == plain._2, "sessionFoldBatch diverged under fold")
       assert(folded._3 == plain._3, "privacyFoldBatch diverged under fold")
-    } finally spark.conf.unset(operators.SegmentFold.ThresholdConf)
+    }
   }
 
   test("watermark boundary: a row with ts == wm drops, ts > wm " +

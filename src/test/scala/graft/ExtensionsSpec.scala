@@ -1,25 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The native expressions are usable from plain SQL once the
   * extensions are installed. */
 class ExtensionsSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    // a pre-existing shared test session won't have gone through the
-    // builder's extension hook — install into its registry directly
-    if (!s.catalog.functionExists("minhash_sig")) GraftExtensions.installInto(s)
-    s
-  }
+  import SparkTest.spark
 
   test("shingle_set + minhash_sig + simhash128 from SQL") {
     val row = spark.sql(

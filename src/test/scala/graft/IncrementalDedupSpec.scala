@@ -36,14 +36,9 @@ class IncrementalDedupSpec extends AnyFunSuite {
   }
 
   test("store side of the band join plans NO exchange (bucket-join)") {
-    val prev = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    val prevA = spark.conf.getOption("spark.sql.adaptive.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    try {
-      val fromStore = Bucketed.read(spark, "mh_band_store")
-      val j = Dedup.mhBands(docs.filter(isBatch)).as("n")
+    GraftSession.scoped(spark, noBroadcast: _*) { c =>
+      val fromStore = Bucketed.read(c, "mh_band_store")
+      val j = Dedup.mhBands(Tables.documents(c, sf).filter(isBatch)).as("n")
         .join(fromStore.as("c"),
           col("n.bkey") === col("c.bkey") &&
             col("n.band") === col("c.band") && col("n.bh") === col("c.bh"))
@@ -55,11 +50,6 @@ class IncrementalDedupSpec extends AnyFunSuite {
       // store's bucketing; the store itself reads co-located
       assert("Exchange hashpartitioning".r.findAllIn(plan).length == 1,
         s"store side shuffled:\n$plan")
-    } finally {
-      prev.foreach(spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
-      prevA.foreach(spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", _))
-      if (prev.isEmpty) spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      if (prevA.isEmpty) spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
     }
   }
 
@@ -88,12 +78,8 @@ class IncrementalDedupSpec extends AnyFunSuite {
 
   test("d13 incremental: store side of the postings probe plans NO " +
       "exchange (bucket-join)") {
-    val prev = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    val prevA = spark.conf.getOption("spark.sql.adaptive.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    try {
+    GraftSession.scoped(spark, noBroadcast: _*) { c =>
+      val docs = Tables.documents(c, sf)
       val batch = docs.filter(col("doc_id") % 3 === 2)
       val (dfDict, storePostings, _) = Dedup.containmentStore(
         docs.filter(col("doc_id") % 3 =!= 2))
@@ -112,7 +98,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
       val bpre = Dedup.containmentPrefix(
         Dedup.containmentSets(keyed), 0.9).localCheckpoint(true)
       val j = bpre.as("p")
-        .join(Bucketed.read(spark, "cont_postings_plan").as("q"),
+        .join(Bucketed.read(c, "cont_postings_plan").as("q"),
           col("p.k") === col("q.k") &&
             col("p.source") === col("q.source") &&
             col("p.doc_id") =!= col("q.doc_id"))
@@ -124,11 +110,6 @@ class IncrementalDedupSpec extends AnyFunSuite {
       // store's bucketing; the store postings read co-located
       assert("Exchange hashpartitioning".r.findAllIn(plan).length == 1,
         s"store side shuffled:\n$plan")
-    } finally {
-      prev.foreach(spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
-      prevA.foreach(spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", _))
-      if (prev.isEmpty) spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      if (prevA.isEmpty) spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
     }
   }
 

@@ -996,20 +996,18 @@ class PipelineSpec extends AnyFunSuite {
     // the determinism contract a cluster exercises: rank tie-breaks,
     // fixed-point sums, and as-of matches must not depend on how many
     // partitions the shuffles land in
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    def snap(name: String) = SparkEntry.queries(name)(spark, sf)
-      .collect().map(_.toString).toSeq
-    try {
-      val base = Seq("t12_bm25", "d9_incremental_dedup",
-        "q16_interval_join", "c6_curriculum_order", "d4_ngram_jaccard",
-        "d11_cluster_maintain", "h16_temporal_align", "c7_global_shuffle")
-        .map(n => n -> snap(n)).toMap
-      spark.conf.set("spark.sql.shuffle.partitions", "7")
+    def snap(s: org.apache.spark.sql.SparkSession, name: String) =
+      SparkEntry.queries(name)(s, sf).collect().map(_.toString).toSeq
+    val base = Seq("t12_bm25", "d9_incremental_dedup",
+      "q16_interval_join", "c6_curriculum_order", "d4_ngram_jaccard",
+      "d11_cluster_maintain", "h16_temporal_align", "c7_global_shuffle")
+      .map(n => n -> snap(spark, n)).toMap
+    GraftSession.scoped(spark, "spark.sql.shuffle.partitions" -> "7") { c =>
       base.foreach { case (n, rows) =>
-        assert(snap(n) == rows, s"$n changed under 7 shuffle partitions")
+        assert(snap(c, n) == rows, s"$n changed under 7 shuffle partitions")
         assert(rows.nonEmpty)
       }
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
   }
 
   test("mergeClusters ≡ union-find on random graphs folded in waves") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan CONTRACTS: structural properties of the executed physical
@@ -14,8 +15,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class PlanContractSpec extends AnyFunSuite {
   import SparkTest._
 
-  private def finalPlan(name: String): String = {
-    val df = SparkEntry.queries(name)(spark, sf)
+  private def finalPlan(name: String): String = finalPlanOn(spark, name)
+
+  private def finalPlanOn(s: SparkSession, name: String): String = {
+    val df = SparkEntry.queries(name)(s, sf)
     // drive the dataset's OWN queryExecution: a df.count() would plan
     // a separate execution and leave this plan non-final
     df.queryExecution.executedPlan.execute().count()
@@ -29,19 +32,8 @@ class PlanContractSpec extends AnyFunSuite {
     * that matters at scale. Disabling broadcast surfaces the
     * shuffle-path plan — the one a 100 TB corpus would run — so the
     * one-scan/reused-exchange contract is what gets asserted. */
-  private def finalPlanNoBroadcast(name: String): String = {
-    val prev = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    val prevA = spark.conf.getOption("spark.sql.adaptive.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try finalPlan(name)
-    finally {
-      prev.foreach(spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
-      prevA.foreach(spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", _))
-      if (prev.isEmpty) spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      if (prevA.isEmpty) spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-    }
-  }
+  private def finalPlanNoBroadcast(name: String): String =
+    GraftSession.scoped(spark, noBroadcast: _*)(finalPlanOn(_, name))
 
   private def scanCount(plan: String): Int =
     "FileScan parquet".r.findAllIn(plan).length
@@ -631,10 +623,9 @@ class PlanContractSpec extends AnyFunSuite {
     val cv = emb.filter(col("vec_id") >= 10)
       .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
     val visited = similarity.Similarity.lshShortlist(spark, sf, 8)
-    val round = similarity.Similarity.s15Expand(visited, graph, q, cv, 8)
-    val prev = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    val expand = similarity.Similarity.s15Expand(visited, graph, q, cv, 8)
+    GraftSession.scoped(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") { c =>
+      val round = GraftSession.on(c, expand)
       round.queryExecution.executedPlan.execute().count()
       val rp = round.queryExecution.executedPlan.toString
         .split("== Initial Plan ==").head
@@ -644,10 +635,6 @@ class PlanContractSpec extends AnyFunSuite {
       assert(rp.contains("SortMergeJoin") || rp.contains("ShuffledHashJoin") ||
         rp.contains("BroadcastHashJoin"),
         s"no hash equi-join in the round expansion:\n$rp")
-    } finally {
-      prev.foreach(spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
-      if (prev.isEmpty)
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }
 

@@ -553,9 +553,8 @@ class StreamAndSinkSpec extends AnyFunSuite {
       "down to retain, never the live root") {
     val root = Files.createTempDirectory("graft_retain_e2e").toString
     val data = Files.createTempDirectory("graft_retain_corpus").toString
-    spark.conf.set("spark.graft.storeRoot", root)
-    spark.conf.set(streaming.StoreFs.RetainConf, "1")
-    try {
+    GraftSession.scoped(spark, "spark.graft.storeRoot" -> root,
+        streaming.StoreFs.RetainConf -> "1") { c =>
       def regen(seed: Int): Unit = {
         import spark.implicits._
         val n = 40
@@ -572,23 +571,20 @@ class StreamAndSinkSpec extends AnyFunSuite {
           .filter(n => n.contains("-surv-fp") && !n.contains(".build-"))
       }
       regen(1)
-      val (v1, g1) = similarity.Similarity.x2EnsureStore(spark, data)
+      val (v1, g1) = similarity.Similarity.x2EnsureStore(c, data)
       assert(Files.exists(Paths.get(v1.stripPrefix("file:"))))
       assert(familyRoots().size == 1)
       // regeneration: new fingerprint -> fresh build; retain=1 sweeps
       // the superseded store, keeps the new live one
       Thread.sleep(1100) // parquet mtime granularity
       regen(2)
-      val (v2, g2) = similarity.Similarity.x2EnsureStore(spark, data)
+      val (v2, g2) = similarity.Similarity.x2EnsureStore(c, data)
       assert(v2 != v1, "regenerated corpus must key a fresh store")
       assert(familyRoots().size == 1,
         s"retain=1 must leave exactly the live root: ${familyRoots()}")
       assert(Files.exists(Paths.get(g2.stripPrefix("file:")).getParent))
       assert(!Files.exists(Paths.get(g1.stripPrefix("file:")).getParent),
         "superseded fingerprint must be swept")
-    } finally {
-      spark.conf.unset("spark.graft.storeRoot")
-      spark.conf.unset(streaming.StoreFs.RetainConf)
     }
   }
 }

@@ -539,17 +539,16 @@ class StreamingKnnSpec extends AnyFunSuite {
     assert(rootA2 != rootA,
       "regenerated corpus at the same path reuses the stale store")
     // the configured root prefixes the store path
-    spark.conf.set("spark.graft.storeRoot", s"$base/stores")
-    try {
-      val rooted = Similarity.s16StoreRootFor(spark, dirA, 3).toString
+    GraftSession.scoped(spark, "spark.graft.storeRoot" -> s"$base/stores") { c =>
+      val rooted = Similarity.s16StoreRootFor(c, dirA, 3).toString
       assert(rooted.startsWith(s"$base/stores/"),
         s"spark.graft.storeRoot not honored: $rooted")
       // and the full ensure-build lands under it and answers
-      val (g0P, _, _) = Similarity.s16EnsureStores(spark, dirA)
+      val (g0P, _, _) = Similarity.s16EnsureStores(c, dirA)
       assert(g0P.startsWith(s"$base/stores/"))
       assert(new java.io.File(
         new java.io.File(g0P).getParentFile, "_built").exists())
-    } finally spark.conf.unset("spark.graft.storeRoot")
+    }
   }
 
   test("bitsFor: integer log2 law — 8 up to 4096, +1 per doubling, " +
