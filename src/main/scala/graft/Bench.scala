@@ -7,11 +7,6 @@ object Bench {
     // isn't charged for session startup.
     spark.read.parquet(s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").count().collect()
-    // Optional local-tooling knob (the driver never sets it): skip
-    // queries, e.g. the near-dup pair family on probe data made of
-    // exact replicas, where the TRUE answer itself is quadratic.
-    val exclude = sys.env.get("SPARK_GRAFT_EXCLUDE")
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
     // Noise control: per query, WARMUP untimed passes (plan
     // compilation, codegen cache, OS file cache), then ITERS measured
     // passes. Headline "queries" carries the per-query MIN — the
@@ -27,8 +22,7 @@ object Bench {
     def loadAvg: Double = math.round(java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage * 100) / 100.0
     val loadStart = loadAvg
-    val results = SparkEntry.queries.filterNot(q => exclude(q._1))
-      .map { case (name, fn) =>
+    val results = SparkEntry.queries.map { case (name, fn) =>
         // a pass that throws is a failure, never a timing: the query
         // stops at its first failed pass and is left out of the maps
         def once(): Option[Double] = {
@@ -49,7 +43,7 @@ object Bench {
         // persisted RDD blocks AFTER each query's measured passes
         // (outside the timed region; warm state WITHIN a query's own
         // passes is untouched). Safe: no DataFrame survives across
-        // queries — every store memo holds PATHS, and each invocation
+        // queries — stores are reached by PATH, and each invocation
         // rebuilds its own checkpoints.
         spark.sharedState.cacheManager.clearCache()
         spark.sparkContext.getPersistentRDDs.values

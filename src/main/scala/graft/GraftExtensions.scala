@@ -1,12 +1,15 @@
 package graft
 
 import graft.expressions.{CmsAgg, HllRegAgg, MinHashSig, MinHashTextSig, ShingleSet, SigAgree, SimHash128, VecDot, VecL2, VectorMeanAgg}
+import graft.plans.AsOfStrategy
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
 /** Registers graft's native expressions as SQL functions, so the
-  * engine's sketch primitives are first-class in `spark.sql(...)`:
+  * engine's sketch primitives are first-class in `spark.sql(...)`,
+  * and the as-of join's planner strategy, so every session built with
+  * the extension (and every clone of one) plans `AsOfJoin`:
   *
   * {{{
   * spark = SparkSession.builder()
@@ -18,8 +21,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftExtensions.registrations
 
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     registrations.foreach(ext.injectFunction)
+    ext.injectPlannerStrategy(_ => AsOfStrategy)
+  }
 }
 
 object GraftExtensions {
@@ -67,11 +72,15 @@ object GraftExtensions {
       new ExpressionInfo(classOf[CmsAgg].getName, "cms_sketch"),
       (args: Seq[Expression]) => CmsAgg(args.head).toAggregateExpression()))
 
-  /** Installs the functions into an already-running session (when the
-    * session was not built with `withExtensions`). */
-  def installInto(session: org.apache.spark.sql.SparkSession): Unit =
+  /** Installs the functions and the as-of strategy into an
+    * already-running session (when the session was not built with
+    * `withExtensions`, its planner is already fixed, so the strategy
+    * joins it as an extra strategy). */
+  def installInto(session: org.apache.spark.sql.SparkSession): Unit = {
     registrations.foreach { case (ident, info, builder) =>
       session.sessionState.functionRegistry
         .registerFunction(ident, info, builder)
     }
+    session.experimental.extraStrategies :+= AsOfStrategy
+  }
 }

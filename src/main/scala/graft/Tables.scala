@@ -66,23 +66,22 @@ object Tables {
     // Derive the split-count estimate from the FILE RELATION, not
     // df.rdd (ADVICE r15: the RDD conversion forces a second full
     // physical planning of the subtree on every call and reads the
-    // pre-AQE count). A parquet scan's split count is
+    // pre-AQE count). The relation is a leaf of the ANALYZED plan:
+    // the unresolved plan of a `read.parquet` frame holds only an
+    // unresolved data source. A parquet scan's split count is
     // ≥ ceil(bytes / maxPartitionBytes) — an UNDERestimate only when
     // many small files pad it upward via openCostInBytes, and then
     // only matters below `target` splits (≲ 4 GB total at the 128 MB
-    // default), where one extra round-robin shuffle is noise. Frames
-    // with no file relation (derived plans) return no estimate and
-    // are left untouched — spread is for scan roots by contract.
-    val bytes = df.queryExecution.logical.collectLeaves().collect {
+    // default), where one extra round-robin shuffle is noise.
+    val bytes = df.queryExecution.analyzed.collectLeaves().collect {
       case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         r.relation.sizeInBytes
     }
-    if (bytes.isEmpty) df
-    else {
-      val maxSplit = math.max(1L, df.sparkSession.sessionState.conf
-        .filesMaxPartitionBytes)
-      val est = bytes.map(b => (b + maxSplit - 1) / maxSplit).sum
-      if (est < target) df.repartition(target) else df
-    }
+    require(bytes.nonEmpty, "spread is for scan roots: the frame has " +
+      "no file relation to estimate its split count from")
+    val maxSplit = math.max(1L, df.sparkSession.sessionState.conf
+      .filesMaxPartitionBytes)
+    val est = bytes.map(b => (b + maxSplit - 1) / maxSplit).sum
+    if (est < target) df.repartition(target) else df
   }
 }

@@ -1310,43 +1310,6 @@ object Dedup {
     if (probes <= 1) semCellPairs(cells)
     else semCellPairs(cells).distinct()
 
-  /** Connected components by iterative min-label propagation:
-    * lbl₀(v) = v; lblₖ₊₁(v) = min(lblₖ(v), min over neighbors
-    * lblₖ(u)). Converges once every vertex holds its component's
-    * minimum id — rounds needed = the graph's eccentricity from each
-    * component's min, and near-dup clusters are near-cliques (LSH
-    * produces most pairs directly), so a handful of rounds closes
-    * them; the spec proves convergence against a driver union-find.
-    * Each round is one shuffle of the VERTEX frame (pairs ≪ corpus);
-    * one eager localCheckpoint per round stops lineage doubling, the
-    * same measured pattern as AliasAnalysis. For adversarial
-    * diameters (million-hop chains) the published alternating
-    * large-star/small-star contraction (Kiveris et al. 2014,
-    * "Connected Components in MapReduce") drops in: same per-round
-    * join shape, O(log²·) rounds guaranteed. */
-  def connectedComponents(edges: DataFrame, rounds: Int = 4): DataFrame = {
-    // materialize the (tiny) symmetrized edge list ONCE: every round
-    // joins against it, and without this the whole upstream pair DAG
-    // (d2's sketch + band join in d8's case) re-executes per round —
-    // measured 4.3 s → ~1.5 s for d8 at sf0.1
-    val e = edges.select(col("src").as("u"), col("dst").as("v"))
-      .union(edges.select(col("dst").as("u"), col("src").as("v")))
-      .localCheckpoint(true)
-    var labels = e.select(col("u").as("id")).distinct()
-      .withColumn("lbl", col("id"))
-    for (_ <- 1 to rounds) {
-      val nbr = e
-        .join(labels.select(col("id").as("v"), col("lbl").as("nlbl")),
-          Seq("v"))
-        .groupBy(col("u").as("id")).agg(min("nlbl").as("min_n"))
-      labels = labels.join(nbr, Seq("id"), "left")
-        .select(col("id"),
-          least(col("lbl"), coalesce(col("min_n"), col("lbl"))).as("lbl"))
-        .localCheckpoint(true)
-    }
-    labels
-  }
-
   /** D8: duplicate-cluster assignment — pairs are not actionable at
     * 100 TB (keeping "one of each pair" over-deletes across chains);
     * dedup needs per-document CLUSTER ids. Edges = the d2 MinHash-LSH
@@ -1369,10 +1332,10 @@ object Dedup {
 
   /** Connected components via alternating large-star / small-star
     * contraction (Kiveris et al. 2014, "Connected Components in
-    * MapReduce and Beyond") run to an EXACT edge-set fixpoint — the
-    * adversarial-diameter drop-in named in [[connectedComponents]]'s
-    * doc: min-label propagation needs diameter-many shuffles (a
-    * million-hop chain = a million rounds), the star contraction
+    * MapReduce and Beyond") run to an EXACT edge-set fixpoint, the
+    * form for adversarial diameters: min-label propagation needs
+    * diameter-many shuffles (a million-hop chain = a million rounds),
+    * the star contraction
     * provably converges in O(log² n) rounds on ANY graph shape.
     *
     * large-star: every node points its strictly-larger neighbors at
@@ -1389,7 +1352,7 @@ object Dedup {
     * exceptAll double-check runs ONCE on digest match (belt and
     * braces, not per round — the r4 three-job probe was d10's whole
     * latency story). maxRounds bounds a pathological input. Returns
-    * (id, lbl) like [[connectedComponents]]. */
+    * (id, lbl) like [[connectedComponentsAdaptive]]. */
   def connectedComponentsStars(edges: DataFrame,
       maxRounds: Int = 30,
       setAsideEdges: Long = 2000000L): DataFrame = {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.plans.{AsOfJoin, AsOfStrategy}
+import graft.plans.AsOfJoin
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -13,15 +13,14 @@ object AsOf {
   /** Left as-of join: every left row + the latest right row whose
     * keys match and whose `rightTimeCol` <= `leftTimeCol`. Time
     * columns must be long-backed (epoch millis). Keep right rows
-    * unique per (keys, time) for deterministic output. */
+    * unique per (keys, time) for deterministic output. The session
+    * must plan with `AsOfStrategy`, which [[graft.GraftSession.local]]
+    * installs. */
   def join(left: DataFrame, right: DataFrame,
       leftKeys: Seq[String], rightKeys: Seq[String],
       leftTimeCol: String, rightTimeCol: String): DataFrame = {
     require(leftKeys.length == rightKeys.length, "key arity mismatch")
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfStrategy
     val lPlan = Bridge.plan(left)
     val rPlan = Bridge.plan(right)
     def attr(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,

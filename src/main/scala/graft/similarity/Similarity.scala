@@ -2,6 +2,8 @@ package graft.similarity
 
 import graft.{GraftSession, Tables}
 import graft.functions.{VectorFunctions => V}
+import graft.streaming.StoreFs
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -574,41 +576,23 @@ object Similarity {
     Tables.embeddings(s, d)
       .filter(col("vec_id") < 10 || col("label").isin(labels: _*))
 
+  /** A single-graph store's layout: `graph` under its directory. */
+  private def graphIn(r: Path): String = new Path(r, "graph").toString
+
   /** Build-if-absent per-predicate GRAPH SHARD for the registered
     * s18: the navigable search graph built over the predicate-
-    * filtered corpus only, persisted under [[storeRoot]] with the
-    * same identity contract as [[s16EnsureStores]] (qualified
-    * absolute path + path hash + corpus fingerprint + the predicate
-    * itself). Shard width follows the FILTERED corpus size (the
-    * bitsFor law inside [[searchGraphOn]]) — a selective predicate
-    * gets a cheaper, denser graph, exactly the pre-filter win the
-    * probe measured. */
-  private val s18FmtTag = "s18store-v1"
-  private val s18Stores = scala.collection.mutable.Map[String, String]()
+    * filtered corpus only, persisted by [[StoreFs.ensure]] (corpus
+    * identity + the predicate itself). Shard width follows the
+    * FILTERED corpus size (the bitsFor law inside [[searchGraphOn]])
+    * — a selective predicate gets a cheaper, denser graph, exactly
+    * the pre-filter win the probe measured. */
   def s18EnsureStore(s: SparkSession, d: String,
-      labels: Seq[Int] = s18Labels): String = synchronized {
-    import org.apache.hadoop.fs.Path
-    val hconf = s.sparkContext.hadoopConfiguration
-    val dQual = {
-      val p = new Path(d)
-      p.getFileSystem(hconf).makeQualified(p).toString
+      labels: Seq[Int] = s18Labels): String =
+    StoreFs.ensure(s, d, "s18store-v1",
+        s"p${labels.sorted.mkString("_")}")(graphIn) { p =>
+      searchGraphOn(filteredEmb(s, d, labels), 16)
+        .select("vec_id", "nbr").write.parquet(p)
     }
-    val fp = corpusFingerprint(s, d)
-    val pred = labels.sorted.mkString("_")
-    s18Stores.getOrElseUpdate(s"$dQual|$pred|$fp", {
-      val root = storeDirFor(s, d, s18FmtTag, s"p$pred")
-      val fs = root.getFileSystem(hconf)
-      if (!fs.exists(new Path(root, "_built"))) {
-        val tmp = new Path(root.getParent,
-          root.getName + ".build-" + System.nanoTime())
-        searchGraphOn(filteredEmb(s, d, labels), 16)
-          .select("vec_id", "nbr")
-          .write.parquet(new Path(tmp, "graph").toString)
-        landBuild(fs, tmp, root, s18FmtTag)
-      }
-      new Path(root, "graph").toString
-    })
-  }
 
   /** S18: FILTERED ANN at the WALK tier (r11) — s17's query shape
     * ("top-k among docs where label ∈ …") answered by the graph-walk
@@ -804,34 +788,14 @@ object Similarity {
   }
 
   /** Build-if-absent search-graph store over r1's dense corpus
-    * (doc_id % 97 ≠ 0) — the s18 ensure-store pattern (content-keyed
-    * root: qualified path + path hash + corpus fingerprint + format
-    * tag), graph width from the corpus count via [[bitsFor]]. */
-  private val r1FmtTag = "r1store-v1"
-  private val r1Stores = scala.collection.mutable.Map[String, String]()
-  def r1EnsureStore(s: SparkSession, d: String): String = synchronized {
-    import org.apache.hadoop.fs.Path
-    val hconf = s.sparkContext.hadoopConfiguration
-    val dQual = {
-      val p = new Path(d)
-      p.getFileSystem(hconf).makeQualified(p).toString
+    * (doc_id % 97 ≠ 0) — a [[StoreFs.ensure]] store, graph width
+    * from the corpus count via [[bitsFor]]. */
+  def r1EnsureStore(s: SparkSession, d: String): String =
+    StoreFs.ensure(s, d, "r1store-v1", "dense")(graphIn) { p =>
+      searchGraphCorpus(
+          Tables.embeddings(s, d).filter(col("vec_id") % 97 =!= 0), 16)
+        .select("vec_id", "nbr").write.parquet(p)
     }
-    val fp = corpusFingerprint(s, d)
-    r1Stores.getOrElseUpdate(s"$dQual|$fp", {
-      val root = storeDirFor(s, d, r1FmtTag, "dense")
-      val fs = root.getFileSystem(hconf)
-      if (!fs.exists(new Path(root, "_built"))) {
-        val tmp = new Path(root.getParent,
-          root.getName + ".build-" + System.nanoTime())
-        searchGraphCorpus(
-            Tables.embeddings(s, d).filter(col("vec_id") % 97 =!= 0), 16)
-          .select("vec_id", "nbr")
-          .write.parquet(new Path(tmp, "graph").toString)
-        landBuild(fs, tmp, root, r1FmtTag)
-      }
-      new Path(root, "graph").toString
-    })
-  }
 
   /** Build-if-absent LEXICAL-ARM store for r1 (r13, VERDICT #4 /
     * SURVEY r13 candidate a): t12's per-(doc, term) BM25 weight frame
@@ -842,30 +806,11 @@ object Similarity {
     * Σ df·qf scoring join, which the store cannot reduce (measured —
     * see PROBE_R1LEX: the win is the weight-build share of the arm,
     * so it shows at large corpora, not at the oracle bench scale). */
-  private val r1LexTag = "r1lex-v1"
-  private val r1LexStores = scala.collection.mutable.Map[String, String]()
   def r1EnsureLexStore(s: SparkSession, d: String): String =
-      synchronized {
-    import org.apache.hadoop.fs.Path
-    val hconf = s.sparkContext.hadoopConfiguration
-    val dQual = {
-      val p = new Path(d)
-      p.getFileSystem(hconf).makeQualified(p).toString
+    StoreFs.ensure(s, d, "r1lex-v1", "lex", "documents")(
+        r => new Path(r, "weights").toString) { p =>
+      graft.text.TextAnalysis.bm25Weights(s, d).write.parquet(p)
     }
-    val fp = corpusFingerprint(s, d, "documents")
-    r1LexStores.getOrElseUpdate(s"$dQual|$fp", {
-      val root = storeDirFor(s, d, r1LexTag, "lex", "documents")
-      val fs = root.getFileSystem(hconf)
-      if (!fs.exists(new Path(root, "_built"))) {
-        val tmp = new Path(root.getParent,
-          root.getName + ".build-" + System.nanoTime())
-        graft.text.TextAnalysis.bm25Weights(s, d)
-          .write.parquet(new Path(tmp, "weights").toString)
-        landBuild(fs, tmp, root, r1LexTag)
-      }
-      new Path(root, "weights").toString
-    })
-  }
 
   /** t12's BM25 arm over the persisted weight store — spec-identical
     * to the inline arm ([[graft.text.TextAnalysis.t12Bm25]]). */
@@ -1448,171 +1393,69 @@ object Similarity {
     * deployment writing a cap-3 atlas could seed different entries
     * than the inline build. */
   def s16WriteAtlas(s: SparkSession, d: String, layer0Path: String,
-      atlasPath: String, levels: Int = 3): Unit = {
-    val g0 = s.read.parquet(layer0Path).select("vec_id", "nbr")
-    val lvl = Tables.embeddings(s, d).filter(col("vec_id") >= 10)
+      atlasPath: String, levels: Int = 3): Unit =
+    writeAtlas(Tables.embeddings(s, d), layer0Path, atlasPath, levels)
+
+  /** [[s16WriteAtlas]] over an arbitrary embeddings-shaped frame: the
+    * atlas of the hierarchy built on `emb`, from its persisted g0. */
+  private def writeAtlas(emb: DataFrame, layer0Path: String,
+      atlasPath: String, levels: Int): Unit = {
+    val g0 = emb.sparkSession.read.parquet(layer0Path)
+      .select("vec_id", "nbr")
+    val lvl = emb.filter(col("vec_id") >= 10)
       .withColumn("level", levelOf(col("vec_id"), levels))
     entryAtlas(lvl, compsOf(g0))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(atlasPath)
   }
 
-  /** The maintained-store root. `spark.graft.storeRoot` (or the
-    * GRAFT_STORE_ROOT env var) names where ensure-built index stores
-    * live; it defaults to the JVM temp dir, which is correct only on
-    * a single machine. On a cluster this MUST be a shared-filesystem
-    * URI every executor and driver resolves identically (hdfs://,
-    * or an object store mounted behind a rename-capable layer — the
-    * build lands via a directory rename, so a store without atomic
-    * rename needs a consistent-commit wrapper). All store I/O here
-    * goes through the Hadoop FileSystem API, so any scheme the
-    * session's Hadoop conf resolves works unchanged. */
-  private[graft] def storeRoot(s: SparkSession): String =
-    s.conf.getOption("spark.graft.storeRoot")
-      .orElse(sys.env.get("GRAFT_STORE_ROOT"))
-      .getOrElse(System.getProperty("java.io.tmpdir"))
+  /** A hierarchy store family's files under `r`: layer 0, the
+    * `levels` upper layers, and the entry atlas. */
+  private def hierarchyLayout(levels: Int)(r: Path)
+      : (String, Seq[String], String) = (
+    new Path(r, "g0").toString,
+    (1 to levels).map(l => new Path(r, s"g$l").toString),
+    new Path(r, "atlas").toString)
 
-  /** Content identity of the corpus a store was built from: a fold
-    * of the embeddings parquet's file names, lengths, and mtimes
-    * (one FS listing — the MySqlDump memo-key pattern). Folded into
-    * the store directory name, so REGENERATING the corpus at the
-    * same path (a fixture rebuild) keys a fresh build
-    * instead of silently answering from the stale graph/atlas. */
-  private[graft] def corpusFingerprint(s: SparkSession, d: String,
-      table: String = "embeddings"): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$d/$table.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.listStatus(p).sortBy(_.getPath.getName)
-      .foldLeft(1125899906842597L) { (a, st) =>
-        ((a * 1000003L + st.getPath.getName.hashCode) * 1000003L +
-          st.getLen) * 1000003L + st.getModificationTime
-      }
+  /** Write the full HNSW store family built on `emb` — the one
+    * hierarchy writer of s16 (the corpus) and x5 (the survivors):
+    * upper layers ([[s16LayersOn]], which also counts the corpus),
+    * layer 0 at the [[bitsFor]] width of that count, then the atlas
+    * from g0 as persisted. */
+  private def writeHierarchy(emb: DataFrame, levels: Int,
+      paths: (String, Seq[String], String)): Unit = {
+    val (g0P, upperPs, atlasP) = paths
+    val (uppers, n) = s16LayersOn(emb, levels)
+    searchGraphOn(emb, 16, bitsFor(n)).select("vec_id", "nbr")
+      .write.parquet(g0P)
+    uppers.zip(upperPs).foreach { case (g, p) => g.write.parquet(p) }
+    writeAtlas(emb, g0P, atlasP, levels)
   }
+
+  private val s16FmtTag = "s16store-v2"
+
+  /** The store directory for (corpus, levels) — see
+    * [[StoreFs.storeDirFor]]. Pure derivation, no build. */
+  private[graft] def s16StoreRootFor(s: SparkSession, d: String,
+      levels: Int): Path =
+    StoreFs.storeDirFor(s, d, s16FmtTag, s"L$levels", "embeddings")
 
   /** Build-if-absent persisted store set for the REGISTERED s16
     * query: layer-0 search graph, `levels` upper-layer graphs, and
     * the entry atlas, written once per (corpus path, levels, corpus
-    * fingerprint) under [[storeRoot]] and reused by every later
+    * fingerprint) under the store root ([[StoreFs.ensure]]: identity,
+    * atomic landing, retention) and reused by every later
     * invocation — the registered `s16_hnsw` is the STORED walk, so
     * the driver's bench measures what production pays per query (the
     * walk), not an index rebuild per invocation. The graphs written
     * here are bit-identical to the [[graft.streaming.StreamingKnn]]
     * search-cadence stores (StreamingKnnSpec proves the store ≡
     * inline identity both ways), so this is exactly the maintained
-    * store's content, materialized eagerly when no stream has run.
-    *
-    * Store identity (ADVICE r10): the directory name carries (a) the
-    * FS-qualified ABSOLUTE corpus path — relative invocations of the
-    * same corpus share the store, cwd can't alias it; (b) a hex hash
-    * of that full path — the readable sanitized segment alone would
-    * collide 'a/b' with 'a_b'; (c) [[corpusFingerprint]] — replacing
-    * the corpus at the same path keys a rebuild, never stale reuse;
-    * (d) `levels` and the fmtTag. The JVM memo shares the same key,
-    * so a mid-JVM regeneration re-keys too.
-    *
-    * Build atomicity: everything lands in a `.build-<nonce>` dir
-    * that renames into place; a concurrent builder that loses the
-    * race discards its attempt and reads the winner. `fmtTag` is a
-    * content-version stamp — bumping it on any build-code change
-    * orphans stale stores instead of silently reusing them. */
-  private val s16FmtTag = "s16store-v2"
-  private val s16Stores =
-    scala.collection.mutable.Map[String, (String, Seq[String], String)]()
-  /** The store directory for (corpus, store family, variant) under
-    * [[storeRoot]] — the identity contract documented at
-    * [[s16EnsureStores]], shared by every ensure-built store. Pure
-    * derivation, no build. */
-  private[graft] def storeDirFor(s: SparkSession, d: String,
-      tag: String, suffix: String,
-      table: String = "embeddings"): org.apache.hadoop.fs.Path = {
-    import org.apache.hadoop.fs.Path
-    val hconf = s.sparkContext.hadoopConfiguration
-    val dQual = {
-      val p = new Path(d)
-      p.getFileSystem(hconf).makeQualified(p).toString
-    }
-    // the fingerprint keys on the table the store DERIVES from —
-    // a documents-derived store (r1's lexical arm) must rebuild when
-    // documents regenerate even if embeddings did not
-    val fp = corpusFingerprint(s, d, table)
-    val safe = dQual.replaceAll("[^A-Za-z0-9._-]", "_").takeRight(80)
-    val pathKey = (dQual.hashCode.toLong & 0xffffffffL).toHexString
-    new Path(storeRoot(s),
-      s"graft-$tag-$safe-$pathKey-$suffix" +
-        s"-fp${java.lang.Long.toHexString(fp)}")
-  }
-
-  /** The store directory for (corpus, levels) — see the identity
-    * contract at [[s16EnsureStores]]. Pure derivation, no build. */
-  private[graft] def s16StoreRootFor(s: SparkSession, d: String,
-      levels: Int): org.apache.hadoop.fs.Path =
-    storeDirFor(s, d, s16FmtTag, s"L$levels")
-
-  /** Land a completed `.build-<nonce>` dir at `root` atomically,
-    * marker-last: write the `_built` marker INTO the build dir, then
-    * rename the whole dir into place. A concurrent builder that
-    * landed first wins; this attempt is discarded. Hadoop rename
-    * moves src INTO an existing destination dir (POSIX mv semantics)
-    * instead of failing, so a build dir that nested itself inside a
-    * winner's store is swept. */
-  private def landBuild(fs: org.apache.hadoop.fs.FileSystem,
-      tmp: org.apache.hadoop.fs.Path, root: org.apache.hadoop.fs.Path,
-      tag: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val builtMarker = new Path(root, "_built")
-    val out = fs.create(new Path(tmp, "_built"), true)
-    try out.write(tag.getBytes("UTF-8")) finally out.close()
-    if (fs.exists(builtMarker)) {
-      fs.delete(tmp, true)
-    } else if (!fs.rename(tmp, root)) {
-      if (!fs.exists(builtMarker))
-        sys.error(s"store build could not land at $root")
-      fs.delete(tmp, true)
-    }
-    val nested = new Path(root, tmp.getName)
-    if (fs.exists(nested)) fs.delete(nested, true)
-    // RETENTION (r13 verdict #4): every landed build sweeps its own
-    // family's superseded fingerprints — the content-keyed roots
-    // otherwise accumulate one dead store per corpus regeneration,
-    // without bound. Winner-keeps + marker-gated (see StoreFs).
-    val keep = org.apache.spark.sql.SparkSession.getActiveSession
-      .map(graft.streaming.StoreFs.retain)
-      .getOrElse(graft.streaming.StoreFs.DefaultRetain)
-    graft.streaming.StoreFs.sweepCompleted(fs, root, keep)
-    ()
-  }
-
+    * store's content, materialized eagerly when no stream has run. */
   def s16EnsureStores(s: SparkSession, d: String,
-      levels: Int = 3): (String, Seq[String], String) = synchronized {
-    import org.apache.hadoop.fs.Path
-    val hconf = s.sparkContext.hadoopConfiguration
-    val dQual = {
-      val p = new Path(d)
-      p.getFileSystem(hconf).makeQualified(p).toString
-    }
-    val fp = corpusFingerprint(s, d)
-    s16Stores.getOrElseUpdate(s"$dQual|$levels|$fp", {
-      val root = s16StoreRootFor(s, d, levels)
-      val fs = root.getFileSystem(hconf)
-      def paths(r: Path) = (
-        new Path(r, "g0").toString,
-        (1 to levels).map(l => new Path(r, s"g$l").toString),
-        new Path(r, "atlas").toString)
-      val builtMarker = new Path(root, "_built")
-      if (!fs.exists(builtMarker)) {
-        val tmp = new Path(root.getParent,
-          root.getName + ".build-" + System.nanoTime())
-        val (g0P, upperPs, atlasP) = paths(tmp)
-        val (uppers, n) = s16Layers(s, d, levels)
-        searchGraph(s, d, 16, bitsFor(n)).select("vec_id", "nbr")
-          .write.parquet(g0P)
-        uppers.zip(upperPs).foreach { case (g, p) => g.write.parquet(p) }
-        s16WriteAtlas(s, d, g0P, atlasP, levels)
-        landBuild(fs, tmp, root, s16FmtTag)
-      }
-      paths(root)
-    })
-  }
+      levels: Int = 3): (String, Seq[String], String) =
+    StoreFs.ensure(s, d, s16FmtTag, s"L$levels")(hierarchyLayout(levels))(
+      writeHierarchy(Tables.embeddings(s, d), levels, _))
 
   /** The s16 store family's REFRESH cadence as a first-class entry
     * point (r11, VERDICT #5 — previously only a probe row): fold one
@@ -2017,61 +1860,39 @@ object Similarity {
     * walk consumers (x1's survivor rule). */
   def x2DedupIndex(s: SparkSession, d: String, k: Int = 5,
       beam: Int = 12, rounds: Int = 3): DataFrame = {
-    val kept = graft.dedup.Dedup.d12SemDedupProd(s, d)
-      .filter(col("keep")).select("vec_id")
-    val embS = Tables.embeddings(s, d)
-      .join(kept, Seq("vec_id"), "left_semi")
-      .localCheckpoint(true)
+    val embS = survivorEmb(s, d).localCheckpoint(true)
     val graph = searchGraphOn(embS, 16).select("vec_id", "nbr")
       .localCheckpoint(true)
     s15WalkOn(embS, graph, k, beam, rounds)
   }
 
+  /** The d12-prod survivors' embeddings: the corpus x2 and x5 index. */
+  private def survivorEmb(s: SparkSession, d: String): DataFrame =
+    Tables.embeddings(s, d).join(
+      graft.dedup.Dedup.d12SemDedupProd(s, d)
+        .filter(col("keep")).select("vec_id"),
+      Seq("vec_id"), "left_semi")
+
   /** Build-if-absent SURVIVOR-INDEX store for the registered x2
     * (r13, VERDICT #3): the d12-prod survivors' vectors and their
     * navigable search graph persisted under the content-keyed root
-    * (the [[s16EnsureStores]] identity contract via [[storeDirFor]]:
-    * qualified path + path hash + corpus fingerprint + format tag;
-    * atomic `.build-<nonce>` landing). The registered x2 then walks
+    * ([[StoreFs.ensure]]). The registered x2 then walks
     * the store — the s15/s16/r1 precedent: nobody re-dedups the
     * corpus and rebuilds its index per query. At ingest the same
     * store shape is MAINTAINED by [[graft.streaming.StreamingEmbDedup]]'s
     * survivor cadence (frozen-cell fold + graph compaction,
     * spec-proven to converge to this batch build). */
-  private val x2FmtTag = "x2store-v1"
-  private val x2Stores =
-    scala.collection.mutable.Map[String, (String, String)]()
   def x2EnsureStore(s: SparkSession, d: String): (String, String) =
-      synchronized {
-    import org.apache.hadoop.fs.Path
-    val hconf = s.sparkContext.hadoopConfiguration
-    val dQual = {
-      val p = new Path(d)
-      p.getFileSystem(hconf).makeQualified(p).toString
-    }
-    val fp = corpusFingerprint(s, d)
-    x2Stores.getOrElseUpdate(s"$dQual|$fp", {
-      val root = storeDirFor(s, d, x2FmtTag, "surv")
-      val fs = root.getFileSystem(hconf)
-      if (!fs.exists(new Path(root, "_built"))) {
-        val tmp = new Path(root.getParent,
-          root.getName + ".build-" + System.nanoTime())
-        val kept = graft.dedup.Dedup.d12SemDedupProd(s, d)
-          .filter(col("keep")).select("vec_id")
+    StoreFs.ensure(s, d, "x2store-v1", "surv")(r =>
+        (new Path(r, "vectors").toString, new Path(r, "graph").toString)) {
+      case (vecsP, graphP) =>
         // survivor vectors are INDEX-RESIDENT (a real ANN index holds
         // its vectors): the walk never touches the raw corpus
-        val embS = Tables.embeddings(s, d)
-          .join(kept, Seq("vec_id"), "left_semi")
+        val embS = survivorEmb(s, d)
           .localCheckpoint(true) // consumers: vector slice + graph build
-        embS.write.parquet(new Path(tmp, "vectors").toString)
-        searchGraphOn(embS, 16).select("vec_id", "nbr")
-          .write.parquet(new Path(tmp, "graph").toString)
-        landBuild(fs, tmp, root, x2FmtTag)
-      }
-      (new Path(root, "vectors").toString,
-        new Path(root, "graph").toString)
-    })
-  }
+        embS.write.parquet(vecsP)
+        searchGraphOn(embS, 16).select("vec_id", "nbr").write.parquet(graphP)
+    }
 
   /** X2 in its production shape — the STORED walk over
     * [[x2EnsureStore]]: per-invocation work is s15's seeded ef walk
@@ -2105,53 +1926,17 @@ object Similarity {
     * recall 0.58 at 30× drift vs 0.10 on the raw dup corpus); the
     * oracle re-derives the entire composition — d12 chain → survivor
     * CTE → every layer graph → components → atlas → the full walk —
-    * independently in SQL. Store identity/atomicity/retention: the
-    * [[s16EnsureStores]] contract via [[storeDirFor]]/[[landBuild]]. */
-  private val x5FmtTag = "x5store-v1"
-  private val x5Stores =
-    scala.collection.mutable.Map[String, (String, Seq[String], String)]()
-
+    * independently in SQL. Store identity/atomicity/retention:
+    * [[StoreFs.ensure]]; the family is written by the same hierarchy
+    * writer as s16's. */
   def x5EnsureStore(s: SparkSession, d: String,
-      levels: Int = 3): (String, Seq[String], String) = synchronized {
-    import org.apache.hadoop.fs.Path
-    val hconf = s.sparkContext.hadoopConfiguration
-    val dQual = {
-      val p = new Path(d)
-      p.getFileSystem(hconf).makeQualified(p).toString
+      levels: Int = 3): (String, Seq[String], String) =
+    StoreFs.ensure(s, d, "x5store-v1", s"shnswL$levels")(
+        hierarchyLayout(levels)) { paths =>
+      val embS = survivorEmb(s, d)
+        .localCheckpoint(true) // consumers: g0 + layer builds + atlas
+      writeHierarchy(embS, levels, paths)
     }
-    val fp = corpusFingerprint(s, d)
-    x5Stores.getOrElseUpdate(s"$dQual|$levels|$fp", {
-      val root = storeDirFor(s, d, x5FmtTag, s"shnswL$levels")
-      val fs = root.getFileSystem(hconf)
-      def paths(r: Path) = (
-        new Path(r, "g0").toString,
-        (1 to levels).map(l => new Path(r, s"g$l").toString),
-        new Path(r, "atlas").toString)
-      val builtMarker = new Path(root, "_built")
-      if (!fs.exists(builtMarker)) {
-        val tmp = new Path(root.getParent,
-          root.getName + ".build-" + System.nanoTime())
-        val (g0P, upperPs, atlasP) = paths(tmp)
-        val kept = graft.dedup.Dedup.d12SemDedupProd(s, d)
-          .filter(col("keep")).select("vec_id")
-        val embS = Tables.embeddings(s, d)
-          .join(kept, Seq("vec_id"), "left_semi")
-          .localCheckpoint(true) // consumers: g0 + layer builds + atlas
-        val (uppers, _) = s16LayersOn(embS, levels)
-        val g0 = searchGraphOn(embS, 16).select("vec_id", "nbr")
-          .localCheckpoint(true) // consumers: persist + atlas comps
-        g0.write.parquet(g0P)
-        uppers.zip(upperPs).foreach { case (g, p) => g.write.parquet(p) }
-        entryAtlas(
-            embS.filter(col("vec_id") >= 10)
-              .withColumn("level", levelOf(col("vec_id"), levels)),
-            compsOf(g0))
-          .write.parquet(atlasP)
-        landBuild(fs, tmp, root, x5FmtTag)
-      }
-      paths(root)
-    })
-  }
 
   /** The registered x5: the stored hierarchical walk over the
     * survivor-built store — [[s16HnswStored]] with every tier

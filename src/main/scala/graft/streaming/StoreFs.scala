@@ -12,7 +12,8 @@ import org.apache.spark.sql.SparkSession
   * `FileSystem.get(uri, conf)` resolves whatever scheme the path
   * carries (file://, hdfs://, s3a://) with the session's Hadoop conf.
   * One shared implementation — previously three near-copies across
-  * the streaming modules. */
+  * the streaming modules. It also holds the one build-if-absent
+  * policy of the ensure-built index stores ([[ensure]]). */
 object StoreFs {
 
   private def fs(s: SparkSession, path: String): (FileSystem, Path) = {
@@ -126,6 +127,114 @@ object StoreFs {
       s"swapDir: could not retire $target")
     require(f.rename(st, tg), s"swapDir: could not land $staging at $target")
     if (f.exists(old)) f.delete(old, true)
+    ()
+  }
+
+  /** The maintained-store root. `spark.graft.storeRoot` names where
+    * ensure-built index stores live; it defaults to the JVM temp dir,
+    * which is correct only on a single machine. On a cluster this
+    * MUST be a shared-filesystem URI every executor and driver
+    * resolves identically (hdfs://, or an object store mounted behind
+    * a rename-capable layer — the build lands via a directory rename,
+    * so a store without atomic rename needs a consistent-commit
+    * wrapper). All store I/O here goes through the Hadoop FileSystem
+    * API, so any scheme the session's Hadoop conf resolves works
+    * unchanged. */
+  private def storeRoot(s: SparkSession): String =
+    s.conf.getOption("spark.graft.storeRoot")
+      .getOrElse(System.getProperty("java.io.tmpdir"))
+
+  /** Content identity of the corpus table a store was built from: a
+    * fold of the table parquet's file names, lengths, and mtimes (one
+    * FS listing — the MySqlDump memo-key pattern). Folded into the
+    * store directory name, so REGENERATING the corpus at the same
+    * path (a fixture rebuild) keys a fresh build instead of silently
+    * answering from the stale graph/atlas. */
+  private def corpusFingerprint(s: SparkSession, d: String,
+      table: String): Long = {
+    val (f, p) = fs(s, s"$d/$table.parquet")
+    f.listStatus(p).sortBy(_.getPath.getName)
+      .foldLeft(1125899906842597L) { (a, st) =>
+        ((a * 1000003L + st.getPath.getName.hashCode) * 1000003L +
+          st.getLen) * 1000003L + st.getModificationTime
+      }
+  }
+
+  /** The store directory for (corpus, store family, variant) under
+    * [[storeRoot]] — pure derivation, no build. The name carries
+    * (a) the FS-qualified ABSOLUTE corpus path — relative invocations
+    * of the same corpus share the store, cwd can't alias it; (b) a
+    * hex hash of that full path — the readable sanitized segment
+    * alone would collide 'a/b' with 'a_b'; (c) [[corpusFingerprint]]
+    * of the table the store DERIVES from — replacing the corpus at
+    * the same path keys a rebuild, never stale reuse, and a
+    * documents-derived store rebuilds when documents regenerate even
+    * if embeddings did not; (d) the family's format tag and variant
+    * suffix. The tag is a content-version stamp — bumping it on any
+    * build-code change orphans stale stores instead of silently
+    * reusing them. */
+  private[graft] def storeDirFor(s: SparkSession, d: String, tag: String,
+      suffix: String, table: String): Path = {
+    val (f, p) = fs(s, d)
+    val dQual = f.makeQualified(p).toString
+    val fp = corpusFingerprint(s, d, table)
+    val safe = dQual.replaceAll("[^A-Za-z0-9._-]", "_").takeRight(80)
+    val pathKey = (dQual.hashCode.toLong & 0xffffffffL).toHexString
+    new Path(storeRoot(s),
+      s"graft-$tag-$safe-$pathKey-$suffix" +
+        s"-fp${java.lang.Long.toHexString(fp)}")
+  }
+
+  /** BUILD-IF-ABSENT persisted store: the one policy every
+    * ensure-built index store follows. The store for (corpus `d`,
+    * `table`, family `tag`, variant `suffix`) lives at
+    * [[storeDirFor]]; `layout` names its files under a store
+    * directory. When the directory carries no `_built` marker,
+    * `build` writes the files at `layout` of a fresh
+    * `.build-<nonce>` staging dir, which then lands at the store
+    * directory marker-last ([[land]]). Reuse is decided by the marker
+    * alone — one `exists` per call, no in-memory memo, so a change of
+    * [[storeRoot]] or of the corpus re-keys at once. Returns the
+    * landed store's `layout`. */
+  def ensure[T](s: SparkSession, d: String, tag: String, suffix: String,
+      table: String = "embeddings")(layout: Path => T)
+      (build: T => Unit): T = synchronized {
+    val root = storeDirFor(s, d, tag, suffix, table)
+    val f = fs(s, root.toString)._1
+    if (!f.exists(new Path(root, "_built"))) {
+      val tmp = new Path(root.getParent,
+        root.getName + ".build-" + System.nanoTime())
+      build(layout(tmp))
+      land(s, f, tmp, root, tag)
+    }
+    layout(root)
+  }
+
+  /** Land a completed `.build-<nonce>` dir at `root` atomically,
+    * marker-last: write the `_built` marker INTO the build dir, then
+    * rename the whole dir into place. A concurrent builder that
+    * landed first wins; this attempt is discarded. Hadoop rename
+    * moves src INTO an existing destination dir (POSIX mv semantics)
+    * instead of failing, so a build dir that nested itself inside a
+    * winner's store is swept. Every landed build then sweeps its own
+    * family's superseded fingerprints down to `s`'s [[retain]] — the
+    * content-keyed roots otherwise accumulate one dead store per
+    * corpus regeneration, without bound. */
+  private def land(s: SparkSession, f: FileSystem, tmp: Path, root: Path,
+      tag: String): Unit = {
+    val builtMarker = new Path(root, "_built")
+    val out = f.create(new Path(tmp, "_built"), true)
+    try out.write(tag.getBytes("UTF-8")) finally out.close()
+    if (f.exists(builtMarker)) {
+      f.delete(tmp, true)
+    } else if (!f.rename(tmp, root)) {
+      if (!f.exists(builtMarker))
+        sys.error(s"store build could not land at $root")
+      f.delete(tmp, true)
+    }
+    val nested = new Path(root, tmp.getName)
+    if (f.exists(nested)) f.delete(nested, true)
+    sweepCompleted(f, root, retain(s))
     ()
   }
 

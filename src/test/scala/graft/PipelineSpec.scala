@@ -883,28 +883,6 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("connected components: random graph ≡ union-find, repartition-proof") {
-    val rnd = new scala.util.Random(7)
-    val raw = Seq.fill(40)((rnd.nextInt(25).toLong, rnd.nextInt(25).toLong))
-      .filter(e => e._1 != e._2)
-    val parent = scala.collection.mutable.Map[Long, Long]()
-    def find(x: Long): Long = {
-      val p = parent.getOrElse(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    raw.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    val expected = raw.flatMap(e => Seq(e._1, e._2)).distinct
-      .map(v => v -> find(v)).toMap
-    import spark.implicits._
-    val got = dedup.Dedup.connectedComponents(
-      raw.toDF("src", "dst").repartition(9), rounds = 10)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == expected)
-  }
-
   test("x1 pipeline: stages nest, report balances, splits partition") {
     val st = operators.CurationPipeline.stages(spark, sf)
       .map { case (n, df) => n ->

@@ -177,6 +177,33 @@ class PlanContractSpec extends AnyFunSuite {
       "band self-join computed the sketch twice")
   }
 
+  test("q14 plans the as-of operator on the shared session and on a " +
+      "scoped clone from the session's own planner: no session's " +
+      "extraStrategies is written") {
+    assert(finalPlan("q14_asof_join").contains("AsOfJoin"),
+      "as-of operator not planned on the shared session")
+    GraftSession.scoped(spark) { c =>
+      assert(finalPlanOn(c, "q14_asof_join").contains("AsOfJoin"),
+        "as-of operator not planned on the scoped clone")
+      assert(c.experimental.extraStrategies.isEmpty)
+    }
+    assert(spark.experimental.extraStrategies.isEmpty,
+      "the as-of join wrote a strategy into the caller's session")
+  }
+
+  test("Tables.spread is for scan roots: a documents scan spreads to " +
+      "the default parallelism with its rows intact; a frame with no " +
+      "file relation is refused") {
+    val docs = Tables.documents(spark, sf)
+    val spread = Tables.spread(docs)
+    assert(spread.rdd.getNumPartitions ==
+      spark.sparkContext.defaultParallelism)
+    assert(spread.collect().toSet == docs.collect().toSet)
+    import spark.implicits._
+    intercept[IllegalArgumentException](
+      Tables.spread(Seq(1L, 2L).toDF("doc_id")))
+  }
+
   test("q16: interval containment runs as the as-of merge scan, " +
       "never a nested-loop range join") {
     val p = finalPlan("q16_interval_join")

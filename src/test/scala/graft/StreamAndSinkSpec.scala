@@ -548,6 +548,23 @@ class StreamAndSinkSpec extends AnyFunSuite {
       Paths.get(base, "graft-nofingerprint").toString, keep = 2) == 0)
   }
 
+  /** A 40-vector embeddings corpus at `data`, varied by `seed`. */
+  private def regen(data: String, seed: Int): Unit = {
+    import spark.implicits._
+    val n = 40
+    (0 until n).map { i =>
+      (i.toLong, Array.tabulate(64)(j =>
+        (((i * 31 + j * 7 + seed) % 13) / 13.0f)), i % 2)
+    }.toDF("vec_id", "embedding", "label")
+      .coalesce(1)
+      .write.mode("overwrite").parquet(s"$data/embeddings.parquet")
+  }
+
+  /** The landed x2 store roots under `root`. */
+  private def familyRoots(root: String): Seq[String] =
+    new java.io.File(root).listFiles().toSeq.map(_.getName)
+      .filter(n => n.contains("-surv-fp") && !n.contains(".build-"))
+
   test("store RETENTION wired to the ensure-build landing path: a " +
       "corpus regeneration keys a fresh store AND sweeps the family " +
       "down to retain, never the live root") {
@@ -555,36 +572,39 @@ class StreamAndSinkSpec extends AnyFunSuite {
     val data = Files.createTempDirectory("graft_retain_corpus").toString
     GraftSession.scoped(spark, "spark.graft.storeRoot" -> root,
         streaming.StoreFs.RetainConf -> "1") { c =>
-      def regen(seed: Int): Unit = {
-        import spark.implicits._
-        val n = 40
-        (0 until n).map { i =>
-          (i.toLong, Array.tabulate(64)(j =>
-            (((i * 31 + j * 7 + seed) % 13) / 13.0f)), i % 2)
-        }.toDF("vec_id", "embedding", "label")
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$data/embeddings.parquet")
-      }
-      def familyRoots(): Seq[String] = {
-        val d = new java.io.File(root)
-        d.listFiles().toSeq.map(_.getName)
-          .filter(n => n.contains("-surv-fp") && !n.contains(".build-"))
-      }
-      regen(1)
+      regen(data, 1)
       val (v1, g1) = similarity.Similarity.x2EnsureStore(c, data)
       assert(Files.exists(Paths.get(v1.stripPrefix("file:"))))
-      assert(familyRoots().size == 1)
+      assert(familyRoots(root).size == 1)
       // regeneration: new fingerprint -> fresh build; retain=1 sweeps
       // the superseded store, keeps the new live one
       Thread.sleep(1100) // parquet mtime granularity
-      regen(2)
+      regen(data, 2)
       val (v2, g2) = similarity.Similarity.x2EnsureStore(c, data)
       assert(v2 != v1, "regenerated corpus must key a fresh store")
-      assert(familyRoots().size == 1,
-        s"retain=1 must leave exactly the live root: ${familyRoots()}")
+      assert(familyRoots(root).size == 1,
+        s"retain=1 must leave exactly the live root: ${familyRoots(root)}")
       assert(Files.exists(Paths.get(g2.stripPrefix("file:")).getParent))
       assert(!Files.exists(Paths.get(g1.stripPrefix("file:")).getParent),
         "superseded fingerprint must be swept")
+    }
+  }
+
+  test("the ensure-build sweep reads the retention of the session it " +
+      "was given, not of the thread's active session") {
+    val root = Files.createTempDirectory("graft_retain_session").toString
+    val data = Files.createTempDirectory("graft_retain_corpus").toString
+    GraftSession.scoped(spark, "spark.graft.storeRoot" -> root,
+        streaming.StoreFs.RetainConf -> "1") { c =>
+      // the shared session (default retain 2) is the active one
+      org.apache.spark.sql.SparkSession.setActiveSession(spark)
+      regen(data, 1)
+      similarity.Similarity.x2EnsureStore(c, data)
+      Thread.sleep(1100) // parquet mtime granularity
+      regen(data, 2)
+      similarity.Similarity.x2EnsureStore(c, data)
+      assert(familyRoots(root).size == 1,
+        s"c's retain=1 must leave only the live root: ${familyRoots(root)}")
     }
   }
 }

@@ -503,19 +503,21 @@ class StreamingKnnSpec extends AnyFunSuite {
       "second invocation rebuilt the per-predicate shard")
   }
 
+  /** A small random embeddings corpus at `dir`: 2 queries, `n` docs. */
+  private def emb(dir: String, seed: Int, n: Int): Unit = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(seed)
+    // vec_id < 10 = queries, >= 10 = corpus (the house convention)
+    ((0L until 2L) ++ (10L until (10L + n))).map(i =>
+        (i, (i % 2).toInt, Array.fill(64)(rnd.nextFloat() - 0.5f)))
+      .toDF("vec_id", "label", "embedding")
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+  }
+
   test("ADVICE r10 store identity: regenerated corpus re-keys the " +
       "store, relative ≡ absolute path, sanitizer collisions " +
       "disambiguated, storeRoot conf honored") {
     import graft.similarity.Similarity
-    def emb(dir: String, seed: Int, n: Int): Unit = {
-      import spark.implicits._
-      val rnd = new scala.util.Random(seed)
-      // vec_id < 10 = queries, >= 10 = corpus (the house convention)
-      ((0L until 2L) ++ (10L until (10L + n))).map(i =>
-          (i, (i % 2).toInt, Array.fill(64)(rnd.nextFloat() - 0.5f)))
-        .toDF("vec_id", "label", "embedding")
-        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    }
     val base = java.nio.file.Files
       .createTempDirectory("graft_sid").toString
     val dirA = s"$base/a/b"; val dirB = s"$base/a_b"
@@ -548,6 +550,29 @@ class StreamingKnnSpec extends AnyFunSuite {
       assert(g0P.startsWith(s"$base/stores/"))
       assert(new java.io.File(
         new java.io.File(g0P).getParentFile, "_built").exists())
+    }
+  }
+
+  test("an ensure re-keys on the store root: the same corpus ensured " +
+      "under the default root, then under a scoped storeRoot, lands " +
+      "and answers under the scoped root") {
+    import graft.similarity.Similarity
+    val base = java.nio.file.Files
+      .createTempDirectory("graft_sroot").toString
+    val dir = s"$base/corpus"
+    emb(dir, 3, 30)
+    val (g0Default, _, _) = Similarity.s16EnsureStores(spark, dir)
+    assert(!g0Default.startsWith(s"$base/stores/"))
+    GraftSession.scoped(spark, "spark.graft.storeRoot" -> s"$base/stores") { c =>
+      val (g0P, upperPs, atlasP) = Similarity.s16EnsureStores(c, dir)
+      assert(g0P.startsWith(s"$base/stores/"),
+        s"second ensure answered from the first root: $g0P")
+      assert(new java.io.File(
+        new java.io.File(g0P).getParentFile, "_built").exists())
+      (upperPs :+ atlasP).foreach(p =>
+        assert(p.startsWith(s"$base/stores/") && new java.io.File(p).exists()))
+      def graph(p: String) = c.read.parquet(p).collect().toSet
+      assert(graph(g0P) == graph(g0Default))
     }
   }
 
