@@ -76,7 +76,7 @@ object HistoryDriver {
     // windows, while a cache boundary forces eager materialization
     // jobs and hides stats from AQE's join planning. (8.4s cached vs
     // 2.8s uncached; the as-of nest rewrite is the algorithmic win.)
-    val parents = b1BugHistoryVersions(s, d)
+    val parents = b1BugHistory(s, d)
     val pur = Tables.events(s, d)
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), unix_millis(col("ts")).as("ts"), col("event_id"),
@@ -116,19 +116,8 @@ object HistoryDriver {
     (parents, subVersions)
   }
 
-  def b1BugHistory(s: SparkSession, d: String): DataFrame =
-    b1BugHistoryVersions(s, d)
-
-  /** b1's shaped inputs — (current, activity, segment bounds) —
-    * exposed for the churn-skew decomposition probe. */
-  private[graft] def b1Parts(s: SparkSession, d: String)
-      : (DataFrame, DataFrame, Option[DataFrame]) = {
-    val (current, activity, segB) = b1Shaped(s, d)
-    (current, activity, segB)
-  }
-
-  private def b1BugHistoryVersions(s: SparkSession, d: String): DataFrame = {
-    val (current, activity, segB) = b1Shaped(s, d)
+  def b1BugHistory(s: SparkSession, d: String): DataFrame = {
+    val (current, activity, segB) = b1Parts(s, d)
     BugHistory.reconstruct(current, activity,
         Seq("status", "owner", "summary"), Seq("cc"),
         longFields = Seq("summary"), segBounds = segB)
@@ -139,7 +128,9 @@ object HistoryDriver {
       .orderBy("id", "version")
   }
 
-  private def b1Shaped(s: SparkSession, d: String)
+  /** b1's shaped inputs — (current, activity, segment bounds) —
+    * also exposed for the churn-skew decomposition probe. */
+  private[graft] def b1Parts(s: SparkSession, d: String)
       : (DataFrame, DataFrame, Option[DataFrame]) = {
     val ev = Tables.events(s, d)
       .select(col("user_id").as("id"), unix_millis(col("ts")).as("ts"),

@@ -60,6 +60,15 @@ object Similarity {
   private val byQuery =
     Window.partitionBy("q_id").orderBy(col("cos3").desc, col("c_id").asc)
 
+  /** The walk family's search widths — constants, not options: the
+    * oracle SQL unrolls exactly these (SparkEntry's s15/s16 walk
+    * bodies), so no other value could be checked. */
+  private val walkBeam = 12     // s15 frontier width; s16 lane-quota budget
+  private val walkRounds = 3    // ef-search rounds on the walked graph
+  private val upperRounds = 2   // s16 descent rounds per upper layer
+  private val descentBeam = 4   // s16 seeded lanes and per-lane descent width
+  private val seedPlanes = 4    // LSH hyperplanes of s2 and of s15's seed tier
+
   /** S1: brute-force cosine top-k — the exact baseline. */
   def s1AnnBruteForce(s: SparkSession, d: String): DataFrame =
     s1AnnBruteForceOn(Tables.embeddings(s, d))
@@ -112,15 +121,15 @@ object Similarity {
     * vec_id < 10 table convention, so the seed tier is
     * frame-parameterized the way the walk body is. */
   private[graft] def lshShortlistQC(qIn: DataFrame, cIn: DataFrame,
-      beam: Int, planes: Int = 4): DataFrame = {
+      beam: Int): DataFrame = {
     val dim = 64
     val q = qIn
-      .withColumn("bucket0", lshBucket(col("q_emb"), planes, dim))
+      .withColumn("bucket0", lshBucket(col("q_emb"), seedPlanes, dim))
       .select(col("q_id"), col("q_emb"), explode(array(
-        (col("bucket0") +: (0 until planes).map(j =>
+        (col("bucket0") +: (0 until seedPlanes).map(j =>
           col("bucket0").bitwiseXOR(lit(1L << j)))): _*)).as("bucket"))
     val c = cIn
-      .withColumn("bucket", lshBucket(col("c_emb"), planes, dim))
+      .withColumn("bucket", lshBucket(col("c_emb"), seedPlanes, dim))
     c.join(broadcast(q), Seq("bucket"))
       .withColumn("cos3", round(V.cosine(col("q_emb"), col("c_emb")), 3))
       .withColumn("rk", row_number().over(byQuery))
@@ -579,6 +588,12 @@ object Similarity {
   /** A single-graph store's layout: `graph` under its directory. */
   private def graphIn(r: Path): String = new Path(r, "graph").toString
 
+  /** The one read of a persisted neighbor-list store: its
+    * (vec_id, nbr) lists, checkpointed because every walk round joins
+    * them. */
+  private def readGraph(s: SparkSession, path: String): DataFrame =
+    s.read.parquet(path).select("vec_id", "nbr").localCheckpoint(true)
+
   /** Build-if-absent per-predicate GRAPH SHARD for the registered
     * s18: the navigable search graph built over the predicate-
     * filtered corpus only, persisted by [[StoreFs.ensure]] (corpus
@@ -620,13 +635,8 @@ object Similarity {
     * contract: zero parquet past checkpoints; behavioral spec: a
     * second invocation reuses the store). */
   def s18FilteredWalk(s: SparkSession, d: String, k: Int = 5,
-      beam: Int = 12, rounds: Int = 3,
-      labels: Seq[Int] = s18Labels): DataFrame = {
-    val gp = s18EnsureStore(s, d, labels)
-    s15WalkOn(filteredEmb(s, d, labels),
-      s.read.parquet(gp).select("vec_id", "nbr").localCheckpoint(true),
-      k, beam, rounds)
-  }
+      labels: Seq[Int] = s18Labels): DataFrame =
+    s18FilteredWalkStored(s, d, s18EnsureStore(s, d, labels), k, labels)
 
   /** The s18 shard family's REFRESH cadence as a first-class entry
     * point (r12, the s16RefreshWave analogue — previously the
@@ -657,23 +667,19 @@ object Similarity {
     * output) instead of the ensure-built one — the s15GraphSearchStored
     * analogue at the filtered tier. */
   def s18FilteredWalkStored(s: SparkSession, d: String,
-      graphPath: String, k: Int = 5, beam: Int = 12, rounds: Int = 3,
+      graphPath: String, k: Int = 5,
       labels: Seq[Int] = s18Labels): DataFrame =
-    s15WalkOn(filteredEmb(s, d, labels),
-      s.read.parquet(graphPath).select("vec_id", "nbr")
-        .localCheckpoint(true),
-      k, beam, rounds)
+    s15WalkOn(filteredEmb(s, d, labels), readGraph(s, graphPath), k)
 
   /** The inline-build twin of [[s18FilteredWalk]] — spec-only, pins
     * stored ≡ inline the way s15/s16's stored forms are pinned. */
   private[graft] def s18FilteredWalkInline(s: SparkSession, d: String,
-      k: Int = 5, beam: Int = 12, rounds: Int = 3,
-      labels: Seq[Int] = s18Labels): DataFrame = {
+      k: Int = 5, labels: Seq[Int] = s18Labels): DataFrame = {
     val emb = filteredEmb(s, d, labels)
     s15WalkOn(emb,
       searchGraphOn(emb, 16).select("vec_id", "nbr")
         .localCheckpoint(true),
-      k, beam, rounds)
+      k)
   }
 
   /** R1: HYBRID RETRIEVAL by reciprocal-rank fusion (r10; r11 = the
@@ -841,12 +847,10 @@ object Similarity {
   def r1RrfProd(s: SparkSession, d: String, k: Int = 5,
       n: Int = 20, c0: Int = 60): DataFrame = {
     val (qv, cv) = r1QueryCorpus(s, d)
-    val graph = s.read.parquet(r1EnsureStore(s, d))
-      .select("vec_id", "nbr").localCheckpoint(true)
     val vec = s15WalkQC(
         qv.select(col("query_id").as("q_id"), col("q_emb")),
         cv.select(col("doc_id").as("c_id"), col("c_emb")),
-        graph, n, 12, 3)
+        readGraph(s, r1EnsureStore(s, d)), n)
       .select(col("q_id").as("query_id"), col("c_id").as("doc_id"),
         col("rank").as("rk"))
     r1Fuse(s, d, vec, qv, cv, k, n, c0, storedLex = true)
@@ -1064,8 +1068,9 @@ object Similarity {
   /** S15: GRAPH-WALK ANN SEARCH — the operator that CONSUMES s14's
     * k-NN graph, completing the production ladder scan tier (s1) →
     * cell/code pruning (s3/s13) → graph walk: seed each query from
-    * the cheap LSH tier ([[lshShortlist]] at `beam`), then `rounds`
-    * ef-search steps — expand the per-query top-`beam` UNEXPANDED
+    * the cheap LSH tier ([[lshShortlist]] at [[walkBeam]]), then
+    * [[walkRounds]] ef-search steps ([[efWalk]]) — expand the
+    * per-query top-[[walkBeam]] UNEXPANDED
     * visited rows through the graph's neighbor lists (a spent
     * candidate releases its frontier slot instead of being
     * re-expanded for nothing — r9 close-2, measured recall@5
@@ -1105,13 +1110,12 @@ object Similarity {
     * whose branches cannot share an exchange — the measured
     * localCheckpoint(true) policy (x1's survivor rule), which also
     * keeps the unrolled plan linear in rounds instead of 3^rounds. */
-  def s15GraphSearch(s: SparkSession, d: String, k: Int = 5,
-      beam: Int = 12, rounds: Int = 3): DataFrame =
-    s15Walk(s, d,
+  def s15GraphSearch(s: SparkSession, d: String, k: Int = 5): DataFrame =
+    s15WalkOn(Tables.embeddings(s, d),
       searchGraph(s, d, 16)
         .select(col("vec_id"), col("nbr"))
         .localCheckpoint(true), // one consumer per round
-      k, beam, rounds)
+      k)
 
   /** s15's walk against a PERSISTED maintained graph — the store
     * [[graft.streaming.StreamingKnn]]'s search cadence keeps current
@@ -1121,73 +1125,32 @@ object Similarity {
     * store, then the identical walk; spec: walk(maintained store) ≡
     * the registered s15 on the same corpus. */
   def s15GraphSearchStored(s: SparkSession, d: String,
-      graphPath: String, k: Int = 5, beam: Int = 12, rounds: Int = 3)
-      : DataFrame =
-    s15Walk(s, d,
-      s.read.parquet(graphPath)
-        .select(col("vec_id"), col("nbr"))
-        .localCheckpoint(true),
-      k, beam, rounds)
+      graphPath: String, k: Int = 5): DataFrame =
+    s15WalkOn(Tables.embeddings(s, d), readGraph(s, graphPath), k)
 
-  /** The NSW walk body shared by the inline-build and maintained-store
-    * forms — ef-search frontier semantics (r9 close-2): each round
-    * expands the per-query top-`beam` UNEXPANDED visited rows, so a
-    * spent candidate releases its slot instead of being re-expanded
-    * for nothing. Same seed, same expansion, same round count as the
-    * pre-ef walk; measured recall@5 vs exact: 0.82 → 0.90 at sf0.01,
-    * 0.72 → 0.90 at sf0.1, unchanged 0.60/0.56 on the seed-bound
-    * 30×/100× drift corpora (PROBE_S15EF). */
-  private def s15Walk(s: SparkSession, d: String, graph: DataFrame,
-      k: Int, beam: Int, rounds: Int): DataFrame =
-    s15WalkOn(Tables.embeddings(s, d), graph, k, beam, rounds)
-
-  /** [[s15Walk]] over an arbitrary embeddings-shaped frame — the x2
-    * composition's survivor walk (also the filtered-walk probes). */
+  /** The s15 walk over an arbitrary embeddings-shaped frame — the
+    * inline-build and maintained-store forms, the x2 composition's
+    * survivor walk and the s18 filtered walk. */
   private[graft] def s15WalkOn(emb: DataFrame, graph: DataFrame,
-      k: Int, beam: Int, rounds: Int): DataFrame =
+      k: Int): DataFrame =
     s15WalkQC(queriesOf(emb),
-      corpusOf(emb).select(col("c_id"), col("c_emb")), graph,
-      k, beam, rounds)
+      corpusOf(emb).select(col("c_id"), col("c_emb")), graph, k)
 
-  /** The walk with query/corpus frames EXPLICIT — r1's production
-    * dense arm ([[r1RrfProd]]) runs the identical ef walk under its
-    * own query protocol. */
+  /** The s15 walk with query/corpus frames EXPLICIT — r1's production
+    * dense arm ([[r1RrfProd]]) runs the identical walk under its own
+    * query protocol: the LSH seed tier at [[walkBeam]], then
+    * [[efWalk]]'s rounds with one frontier per query (r9 close-2
+    * ef-search semantics; measured recall@5 vs exact: 0.82 → 0.90 at
+    * sf0.01, 0.72 → 0.90 at sf0.1, unchanged 0.60/0.56 on the
+    * seed-bound 30×/100× drift corpora, PROBE_S15EF). */
   private[graft] def s15WalkQC(q: DataFrame, cv: DataFrame,
-      graph: DataFrame, k: Int, beam: Int, rounds: Int,
-      seedPlanes: Int = 4): DataFrame =
+      graph: DataFrame, k: Int): DataFrame =
     GraftSession.scoped(q.sparkSession, walkState: _*) { c =>
-      // ONE state frame, ONE materialization per round (r15 opt):
-      // separate visited/expanded frames cost 3 eager pipelines per
-      // round (58 jobs per s15 walk for ~600 state rows, s16: 133).
-      // An `exp` FLAG on the visited rows, leading the window order,
-      // ranks the unexpanded prefix exactly as an anti-join + window
-      // would, so frontier (the top-beam unexpanded slice), flag update
-      // and expansion union form one checkpointed plan. Bit-identical
-      // output — the oracle and the stored≡inline specs pin it.
       // |Q|-bounded constant query batch → LocalRelation (zero
       // per-round broadcast-build jobs; see localize)
       val lq = localize(q)
-      var state = lshShortlistQC(lq, cv, beam, seedPlanes)
-        .withColumn("exp", lit(false))
-        .localCheckpoint(true)
-      val byQueryEf = Window.partitionBy("q_id")
-        .orderBy(col("exp").asc, col("cos3").desc, col("c_id").asc)
-      for (_ <- 1 to rounds) {
-        val ranked = state.withColumn("rk", row_number().over(byQueryEf))
-        val frontier = ranked
-          .filter(!col("exp") && col("rk") <= beam)
-          .select("q_id", "c_id")
-        state = cpState(c)(ranked
-          .select(col("q_id"), col("c_id"), col("cos3"),
-            (col("exp") || col("rk") <= beam).as("exp"))
-          .union(expandFrontier(frontier, state, graph, lq, cv)
-            .withColumn("exp", lit(false))))
-      }
-      state
-        .withColumn("rank", row_number().over(byQuery).cast("long"))
-        .filter(col("rank") <= k)
-        .select(col("q_id"), col("rank"), col("c_id"), col("cos3").as("cos"))
-        .orderBy("q_id", "rank")
+      val seed = lshShortlistQC(lq, cv, walkBeam).localCheckpoint(true)
+      efWalk(c, seed, None, graph, lq, cv, k)
     }
 
   /** S16: HIERARCHICAL navigable-small-world search (HNSW — Malkov &
@@ -1222,7 +1185,8 @@ object Similarity {
     * rounds per layer per lane, top level down; layer 0 runs 3
     * ef-search rounds where each round expands the top-quota
     * UNEXPANDED candidates per lane, with quotas mass-proportional
-    * (beam × csize ∕ Σcsize, integer div, floor 1); the final top-k
+    * ([[walkBeam]] × csize ∕ Σcsize, integer div, floor 1), through
+    * the same [[efWalk]] rounds as s15; the final top-k
     * re-rank is the only global step. Everything is a total order
     * (3-dp cosine + id) — replays bit-identically; the oracle
     * unrolls the atlas (exact components via a recursive
@@ -1268,7 +1232,6 @@ object Similarity {
     * member counts are bounded driver probes (catalog stats in
     * production, the searchGraph rule). */
   def s16Hnsw(s: SparkSession, d: String, k: Int = 5,
-      beam: Int = 12, rounds: Int = 3, upperRounds: Int = 2,
       levels: Int = 3): DataFrame = {
     // NOTE (r10): this INLINE build is the reference form the specs
     // pin stored forms against; the REGISTERED s16_hnsw walks
@@ -1277,7 +1240,7 @@ object Similarity {
     val (upperGraphs, n) = s16Layers(s, d, levels)
     val g0 = searchGraph(s, d, 16, bitsFor(n))
       .select("vec_id", "nbr").localCheckpoint(true)
-    s16Walk(s, d, g0, upperGraphs, k, beam, rounds, upperRounds)
+    s16Walk(s, d, g0, upperGraphs, k, None)
   }
 
   /** s16's upper-layer graphs (one bucketed build for ALL of them)
@@ -1364,14 +1327,11 @@ object Similarity {
     * vec_id, so the stream routes without coordination). Spec: the
     * stored walk answers identically to the inline-build s16. */
   def s16HnswStored(s: SparkSession, d: String, layer0Path: String,
-      upperPaths: Seq[String], k: Int = 5, beam: Int = 12,
-      rounds: Int = 3, upperRounds: Int = 2,
+      upperPaths: Seq[String], k: Int = 5,
       atlasPath: Option[String] = None): DataFrame = {
     require(upperPaths.nonEmpty, "at least one upper-layer store expected")
-    val g0 = s.read.parquet(layer0Path)
-      .select("vec_id", "nbr").localCheckpoint(true)
-    val uppers = upperPaths.map(p => s.read.parquet(p)
-      .select("vec_id", "nbr").localCheckpoint(true))
+    val g0 = readGraph(s, layer0Path)
+    val uppers = upperPaths.map(readGraph(s, _))
     // with a persisted atlas the stored walk touches NO corpus-sized
     // computation at all: seeds come from the atlas store, hops from
     // the layer stores. Single consumer (the seed scoring pass), so
@@ -1379,8 +1339,7 @@ object Similarity {
     // per invocation (r15 opt)
     val entry = atlasPath.map(p => s.read.parquet(p)
       .select("c_id", "comp", "csize"))
-    s16Walk(s, d, g0, uppers, k, beam, rounds, upperRounds,
-      entry = entry)
+    s16Walk(s, d, g0, uppers, k, entry)
   }
 
   /** Refresh the PERSISTED entry atlas from a persisted layer-0
@@ -1498,12 +1457,11 @@ object Similarity {
     s16WriteAtlas(s, d, s"$root/g0", s"$root/atlas", levels)
   }
 
-  /** The hierarchical descent + layer-0 beam walk shared by the
+  /** The hierarchical descent + layer-0 lane walk shared by the
     * inline-build and maintained-store s16 forms. */
-  private[graft] def s16Walk(s: SparkSession, d: String, g0: DataFrame,
-      upperGraphs: Seq[DataFrame], k: Int, beam: Int, rounds: Int,
-      upperRounds: Int, descentBeam: Int = 4,
-      entry: Option[DataFrame] = None): DataFrame =
+  private def s16Walk(s: SparkSession, d: String, g0: DataFrame,
+      upperGraphs: Seq[DataFrame], k: Int,
+      entry: Option[DataFrame]): DataFrame =
     GraftSession.scoped(s, walkState: _*) { c =>
       val levels = upperGraphs.size
       val emb = Tables.embeddings(s, d).filter(col("vec_id") >= 10)
@@ -1535,7 +1493,7 @@ object Similarity {
       // Each seed opens a LANE (lane id = the seed's component), and
       // ALL walk state below is per (q_id, lane): the descent keeps the
       // best candidate per lane, the layer-0 rounds run an ef-style
-      // top-`laneBeam`-UNEXPANDED-per-lane frontier, and only the final
+      // top-quota-UNEXPANDED-per-lane frontier, and only the final
       // re-rank is global. Without lanes the 30× diag measured recall 0
       // with a 1.00 seed ceiling: a sharp near-dup chain outscores the
       // organic mass everywhere (cos 0.4+ vs an entry's 0.3), so a
@@ -1562,7 +1520,7 @@ object Similarity {
       var cur = seeds.select(col("q_id"), col("c_id"), col("cos3"),
         col("comp").as("lane"))
       // MASS-PROPORTIONAL frontier quotas: each lane's share of the
-      // `beam` expansion budget ∝ its component's size (integer `div`,
+      // walkBeam expansion budget ∝ its component's size (integer `div`,
       // floor 1 — exact in both engines). The corpus's answers live
       // where its mass lives: the giant organic component takes
       // essentially the whole beam, while a 29-member dup chain keeps
@@ -1573,7 +1531,7 @@ object Similarity {
         .select(col("q_id"), col("comp").as("lane"), col("csize"))
         .withColumn("tot", sum("csize").over(Window.partitionBy("q_id")))
         .withColumn("quota",
-          greatest(lit(1L), expr(s"($beam * csize) div tot")))
+          greatest(lit(1L), expr(s"($walkBeam * csize) div tot")))
         .select("q_id", "lane", "quota")
       // |Q|·lanes rows, joined by every layer-0 round: LocalRelation
       // (zero per-round broadcast-build jobs), not a checkpoint
@@ -1596,38 +1554,61 @@ object Similarity {
       for (l <- levels to 1 by -1) {
         for (_ <- 1 to upperRounds)
           cur = cpState(c)(cur
-            .union(laneExpand(cur, cur, upperGraphs(l - 1), q, cv))
+            .union(efExpand(cur, cur, upperGraphs(l - 1), q, cv,
+              Seq("lane")))
             .withColumn("rk", row_number().over(byLane))
             .filter(col("rk") <= descentBeam)
             .select("q_id", "c_id", "cos3", "lane"))
       }
-      // ONE state frame, ONE materialization per round: the same
-      // `exp`-flag fold as s15WalkQC, with the lane key in the window
-      // and the quota budgets as the per-lane frontier width.
-      var state = cur.withColumn("exp", lit(false))
-      val byLaneEf = Window.partitionBy("q_id", "lane")
-        .orderBy(col("exp").asc, col("cos3").desc, col("c_id").asc)
-      for (_ <- 1 to rounds) {
-        val ranked = state
-          .join(broadcast(quotasL), Seq("q_id", "lane"), "left")
-          .withColumn("rk", row_number().over(byLaneEf))
-        val frontier = ranked
-          .filter(!col("exp") && col("rk") <= col("quota"))
-          .select("q_id", "c_id", "cos3", "lane")
-        state = cpState(c)(ranked
-          .select(col("q_id"), col("c_id"), col("cos3"), col("lane"),
-            (col("exp") || col("rk") <= coalesce(col("quota"), lit(0L)))
-              .as("exp"))
-          .union(laneExpand(frontier, state, g0, q, cv)
-            .withColumn("exp", lit(false))))
-      }
-      state
-        .select("q_id", "c_id", "cos3").distinct()
-        .withColumn("rank", row_number().over(byQuery).cast("long"))
-        .filter(col("rank") <= k)
-        .select(col("q_id"), col("rank"), col("c_id"), col("cos3").as("cos"))
-        .orderBy("q_id", "rank")
+      // layer 0: s15's ef rounds, per lane, at the quota widths
+      efWalk(c, cur, Some(quotasL), g0, q, cv, k)
     }
+
+  /** The ef-search rounds and final top-k re-rank of every walk:
+    * s15's (one frontier per query, [[walkBeam]] wide; `quotas` None)
+    * and s16's layer 0 (one frontier per (query, lane), each lane's
+    * `quota` wide). ONE state frame, ONE materialization per round
+    * (r15 opt): separate visited/expanded frames cost 3 eager
+    * pipelines per round (58 jobs per s15 walk for ~600 state rows,
+    * s16: 133). An `exp` FLAG on the visited rows, leading the window
+    * order, ranks the unexpanded prefix exactly as an anti-join +
+    * window would, so frontier (the top-width unexpanded slice),
+    * flag update and expansion union form one checkpointed plan.
+    * Bit-identical output — the oracle and the stored≡inline specs
+    * pin it. The re-rank is the only global step; with lanes, a
+    * vector reached from two lanes is deduped first. */
+  private def efWalk(c: SparkSession, seed: DataFrame,
+      quotas: Option[DataFrame], graph: DataFrame, q: DataFrame,
+      cv: DataFrame, k: Int): DataFrame = {
+    val lanes = if (quotas.isDefined) Seq("lane") else Nil
+    val key = "q_id" +: lanes
+    val byKeyEf = Window.partitionBy(key.map(col): _*)
+      .orderBy(col("exp").asc, col("cos3").desc, col("c_id").asc)
+    // frontier width: the beam, or the lane's quota (a lane without
+    // one never expands)
+    val (front, spent) =
+      if (quotas.isEmpty) (col("rk") <= walkBeam, col("rk") <= walkBeam)
+      else (col("rk") <= col("quota"),
+        col("rk") <= coalesce(col("quota"), lit(0L)))
+    var state = seed.withColumn("exp", lit(false))
+    for (_ <- 1 to walkRounds) {
+      val ranked = quotas
+        .fold(state)(qt => state.join(broadcast(qt), key, "left"))
+        .withColumn("rk", row_number().over(byKeyEf))
+      val frontier = ranked.filter(!col("exp") && front)
+      state = cpState(c)(ranked
+        .select((Seq("q_id", "c_id", "cos3") ++ lanes).map(col) :+
+          (col("exp") || spent).as("exp"): _*)
+        .union(efExpand(frontier, state, graph, q, cv, lanes)
+          .withColumn("exp", lit(false))))
+    }
+    val found = state.select("q_id", "c_id", "cos3")
+    (if (quotas.isDefined) found.distinct() else found)
+      .withColumn("rank", row_number().over(byQuery).cast("long"))
+      .filter(col("rank") <= k)
+      .select(col("q_id"), col("rank"), col("c_id"), col("cos3").as("cos"))
+      .orderBy("q_id", "rank")
+  }
 
   /** Materialize a walk-STATE pipeline on the walk's scoped session
     * `c` ([[walkState]]: AQE off, 8 partitions; r16 opt) and move the
@@ -1667,28 +1648,39 @@ object Similarity {
       java.util.Arrays.asList(rows: _*), df.schema)
   }
 
-  /** One lane-walk round: expand EVERY row of `frontier` through the
-    * graph's neighbor lists, keep candidates UNSEEN in their own
-    * lane (anti-join against `visited`), and exact-score them. The
-    * lane tag rides the expansion — a vector reachable from two
-    * lanes is scored in both (same cosine; the final global re-rank
-    * dedups). */
-  private def laneExpand(frontier: DataFrame, visited: DataFrame,
-      graph: DataFrame, q: DataFrame, cv: DataFrame): DataFrame = {
-    // walk-state frames are |Q|-bounded at any scale — broadcast
-    // them explicitly so only the corpus-sized graph/vector sides
-    // stream (see expandFrontier's rationale, r15 opt)
-    val cand = broadcast(frontier.select("q_id", "c_id", "lane"))
+  /** One walk round's expansion, the one of every walk (s15's rounds,
+    * s16's descent and layer-0 rounds): expand EVERY row of
+    * `frontier` through the graph's neighbor lists, keep candidates
+    * UNSEEN under the walk's key — (q_id, c_id) plus the `lanes`
+    * columns (anti-join against `visited`) — and exact-score them.
+    * A lane tag rides the expansion: a vector reachable from two
+    * lanes is scored in both (same cosine; the final re-rank dedups).
+    * All joins are equi-joins (frontier→graph on vec_id,
+    * candidate→vector on c_id, query embedding on q_id): hash by
+    * construction. */
+  private[graft] def efExpand(frontier: DataFrame, visited: DataFrame,
+      graph: DataFrame, q: DataFrame, cv: DataFrame,
+      lanes: Seq[String]): DataFrame = {
+    val key = Seq("q_id", "c_id") ++ lanes
+    // every frame here except `graph` and `cv` is |Q|-bounded BY
+    // CONSTRUCTION (frontier ≤ |Q|·beam, visited ≤ |Q|·(seed +
+    // beam·nbrs·rounds) — per-query-batch walk state, corpus-
+    // independent at any scale), so hint the broadcasts explicitly:
+    // plan-time BroadcastHashJoins instead of exchanges AQE must
+    // first shuffle and then convert (r15 opt — each avoided
+    // exchange is one fewer AQE stage job per round, and the
+    // corpus-sized graph/vector sides stream with no shuffle at all)
+    val cand = broadcast(frontier.select(key.map(col): _*))
       .join(graph, col("c_id") === col("vec_id"))
-      .select(col("q_id"), col("nbr").as("c_id"), col("lane")).distinct()
-      .join(broadcast(visited.select("q_id", "c_id", "lane")),
-        Seq("q_id", "c_id", "lane"), "left_anti")
+      .select(col("q_id") +: col("nbr").as("c_id") +: lanes.map(col): _*)
+      .distinct()
+      .join(broadcast(visited.select(key.map(col): _*)), key, "left_anti")
     broadcast(cand)
       .join(cv, "c_id")
       .join(broadcast(q), "q_id")
-      .select(col("q_id"), col("c_id"),
-        round(V.cosine(col("q_emb"), col("c_emb")), 3).as("cos3"),
-        col("lane"))
+      .select(Seq(col("q_id"), col("c_id"),
+        round(V.cosine(col("q_emb"), col("c_emb")), 3).as("cos3")) ++
+        lanes.map(col): _*)
   }
 
   /** s16's entry atlas: `perCell` entries per (label × layer-0
@@ -1858,12 +1850,11 @@ object Similarity {
     * of the survivors, query-proportional walk rounds; the survivor
     * frame is checkpointed once and feeds the graph build and all
     * walk consumers (x1's survivor rule). */
-  def x2DedupIndex(s: SparkSession, d: String, k: Int = 5,
-      beam: Int = 12, rounds: Int = 3): DataFrame = {
+  def x2DedupIndex(s: SparkSession, d: String, k: Int = 5): DataFrame = {
     val embS = survivorEmb(s, d).localCheckpoint(true)
     val graph = searchGraphOn(embS, 16).select("vec_id", "nbr")
       .localCheckpoint(true)
-    s15WalkOn(embS, graph, k, beam, rounds)
+    s15WalkOn(embS, graph, k)
   }
 
   /** The d12-prod survivors' embeddings: the corpus x2 and x5 index. */
@@ -1900,13 +1891,10 @@ object Similarity {
     * the graph build are paid once per (corpus, fingerprint) and
     * amortized at ingest. ≡ [[x2DedupIndex]] (spec: stored ≡ inline),
     * so the composed oracle is unchanged. */
-  def x2DedupIndexStored(s: SparkSession, d: String, k: Int = 5,
-      beam: Int = 12, rounds: Int = 3): DataFrame = {
+  def x2DedupIndexStored(s: SparkSession, d: String, k: Int = 5)
+      : DataFrame = {
     val (vecsP, graphP) = x2EnsureStore(s, d)
-    s15WalkOn(s.read.parquet(vecsP),
-      s.read.parquet(graphP).select("vec_id", "nbr")
-        .localCheckpoint(true),
-      k, beam, rounds)
+    s15WalkOn(s.read.parquet(vecsP), readGraph(s, graphP), k)
   }
 
   /** X5: the SURVIVOR-BUILT HIERARCHICAL index (r13 verdict #3 — the
@@ -2023,47 +2011,16 @@ object Similarity {
       .distinct()
   }
 
-  /** One s15 round: expand the per-query top-`beam` of `visited`
-    * through the graph's neighbor lists, keep UNSEEN candidates, and
-    * exact-score them — exposed so the plan contract can audit a
-    * round's join structure directly (the checkpointed loop hides
-    * interior rounds from the final plan). All joins are equi-joins
-    * (frontier→graph on vec_id, candidate→vector on c_id, query
-    * embedding broadcast on q_id): hash by construction. */
+  /** One s15 round: [[efExpand]] with the per-query top-[[walkBeam]]
+    * of `visited` as frontier — exposed so the plan contract can audit
+    * a round's join structure directly (the checkpointed loop hides
+    * interior rounds from the final plan). */
   private[graft] def s15Expand(visited: DataFrame, graph: DataFrame,
-      q: DataFrame, cv: DataFrame, beam: Int): DataFrame =
-    expandFrontier(
-      visited
-        .withColumn("rk", row_number().over(byQuery))
-        .filter(col("rk") <= beam)
-        .select("q_id", "c_id"),
-      visited, graph, q, cv)
-
-  /** The expansion half of an s15 round, with the frontier EXPLICIT:
-    * unseen graph neighbors of the frontier rows, exact-scored. */
-  private[graft] def expandFrontier(frontier: DataFrame,
-      visited: DataFrame, graph: DataFrame, q: DataFrame,
-      cv: DataFrame): DataFrame = {
-    // every frame here except `graph` and `cv` is |Q|-bounded BY
-    // CONSTRUCTION (frontier ≤ |Q|·beam, visited ≤ |Q|·(seed +
-    // beam·nbrs·rounds) — per-query-batch walk state, corpus-
-    // independent at any scale), so hint the broadcasts explicitly:
-    // plan-time BroadcastHashJoins instead of exchanges AQE must
-    // first shuffle and then convert (r15 opt — each avoided
-    // exchange is one fewer AQE stage job per round, and the
-    // corpus-sized graph/vector sides stream with no shuffle at all)
-    val cand = broadcast(frontier)
-      .join(graph, col("c_id") === col("vec_id"))
-      .select(col("q_id"), col("nbr").as("c_id")).distinct()
-      .join(broadcast(visited.select("q_id", "c_id")),
-        Seq("q_id", "c_id"), "left_anti")
-    broadcast(cand)
-      .join(cv, "c_id")
-      .join(broadcast(q), "q_id")
-      .select(col("q_id"), col("c_id"),
-        round(V.cosine(col("q_emb"), col("c_emb")), 3).as("cos3"))
-  }
-
+      q: DataFrame, cv: DataFrame): DataFrame =
+    efExpand(
+      visited.withColumn("rk", row_number().over(byQuery))
+        .filter(col("rk") <= walkBeam),
+      visited, graph, q, cv, Nil)
 
   /** s14's graph body over an arbitrary verified pair frame
     * (id1, id2, cos) — shared with StreamingKnn's maintained fold. */

@@ -503,10 +503,9 @@ object EventStreamFold {
   }
 
   private def readWm(s: SparkSession, root: String, batchId: Long): Long = {
-    val dirs = StoreFs.priorBatchDirs(s, s"$root/wm", batchId)
-    if (dirs.isEmpty) 0L
-    else s.read.parquet(dirs.maxBy(_.split("batch_").last.toLong))
-      .head().getLong(0)
+    val slices = StoreFs.priorBatches(s, s"$root/wm", batchId)
+    if (slices.isEmpty) 0L
+    else s.read.parquet(slices.maxBy(_._1)._2).head().getLong(0)
   }
 
   private def writeWm(s: SparkSession, root: String, batchId: Long,

@@ -21,20 +21,28 @@ object StoreFs {
     (p.getFileSystem(s.sessionState.newHadoopConf()), p)
   }
 
-  /** Store slices holding batches strictly BEFORE `batchId` — replay
-    * safety: a re-run batch must not see its own first attempt. */
-  def priorBatchDirs(s: SparkSession, storePath: String,
-      batchId: Long): Seq[String] = {
+  /** A store slice's directory name: `batch_<id>`, nothing else —
+    * .compact.build staging and a crash-left batch_N.old swap remnant
+    * must not parse. */
+  private val sliceName = "batch_(\\d+)".r
+
+  /** Store slices holding batches strictly BEFORE `batchId`, as
+    * (batch id, path) — replay safety: a re-run batch must not see
+    * its own first attempt. The one parse of the slice-name grammar. */
+  def priorBatches(s: SparkSession, storePath: String,
+      batchId: Long): Seq[(Long, String)] = {
     val (f, root) = fs(s, storePath)
     if (!f.exists(root)) Seq.empty
-    else f.listStatus(root).toSeq
-      // exact batch_<digits> only: .compact.build staging and a
-      // crash-left batch_N.old swap remnant must not parse
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.matches("batch_\\d+"))
-      .filter(_.getPath.getName.stripPrefix("batch_").toLong < batchId)
-      .map(_.getPath.toString)
+    else f.listStatus(root).toSeq.filter(_.isDirectory)
+      .map(st => (st.getPath.getName, st.getPath.toString))
+      .collect { case (sliceName(id), p) if id.toLong < batchId =>
+        (id.toLong, p) }
   }
+
+  /** [[priorBatches]]' paths alone. */
+  def priorBatchDirs(s: SparkSession, storePath: String,
+      batchId: Long): Seq[String] =
+    priorBatches(s, storePath, batchId).map(_._2)
 
   def exists(s: SparkSession, path: String): Boolean = {
     val (f, p) = fs(s, path)
@@ -72,21 +80,20 @@ object StoreFs {
       if (f.exists(new Path(s"$stage/_sources")))
         return finishCompact(s, storePath, stage)
       else deleteDir(s, stage)
-    val all = priorBatchDirs(s, storePath, Long.MaxValue)
-      .map(p => p -> p.split("batch_").last.toLong)
+    val all = priorBatches(s, storePath, Long.MaxValue)
     if (all.size < 3) return 0
-    val newestId = all.map(_._2).max
-    val olds = all.filter(_._2 != newestId)
-    val src = s.read.parquet(olds.map(_._1): _*)
-    val bytes = olds.map { case (p, _) =>
+    val newestId = all.map(_._1).max
+    val olds = all.filter(_._1 != newestId)
+    val src = s.read.parquet(olds.map(_._2): _*)
+    val bytes = olds.map { case (_, p) =>
       f.getContentSummary(new Path(p)).getLength }.sum
     val parts = math.max(1L, bytes / (128L << 20)).toInt
     src.coalesce(parts).write.mode("overwrite").parquet(stage)
     // the COMMIT POINT: the manifest (slice dir names, target last)
     // lands only after the merged parquet is complete — from here the
     // merge wins and any crash resumes via finishCompact
-    val target = olds.maxBy(_._2)._1.split("/").last
-    val names = olds.map(_._1.split("/").last).filter(_ != target) :+ target
+    val target = olds.maxBy(_._1)._2.split("/").last
+    val names = olds.map(_._2.split("/").last).filter(_ != target) :+ target
     val out = f.create(new Path(s"$stage/_sources"), true)
     out.write(names.mkString("\n").getBytes("UTF-8")); out.close()
     finishCompact(s, storePath, stage)

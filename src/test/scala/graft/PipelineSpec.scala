@@ -518,8 +518,8 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("x5 survivor-built hierarchy (r14): every answer is a d12 " +
-      "survivor, ranks dense per query, and the ensure-store memo " +
-      "serves the second invocation from the same persisted root") {
+      "survivor, ranks dense per query, and a second ensure call " +
+      "reuses the persisted store without rewriting its _built marker") {
     import org.apache.spark.sql.functions.col
     val kept = dedup.Dedup.d12SemDedupProd(spark, sf)
       .filter(col("keep")).collect().map(_.getLong(0)).toSet
@@ -533,8 +533,14 @@ class PipelineSpec extends AnyFunSuite {
         s"ranks not dense for query $q")
     }
     val p1 = similarity.Similarity.x5EnsureStore(spark, sf)
+    val marker = new java.io.File(
+      new java.io.File(p1._1).getParentFile, "_built")
+    assert(marker.exists(), "store build left no completion marker")
+    val stamp = marker.lastModified()
     assert(p1 == similarity.Similarity.x5EnsureStore(spark, sf),
-      "second invocation must serve the memoized store")
+      "second invocation must return the same persisted store")
+    assert(marker.lastModified() == stamp,
+      "second invocation rebuilt the store over its _built marker")
     assert(p1._1.contains("x5store-v1") && p1._1.contains("shnswL3"),
       "store root must carry the format stamp and hierarchy variant")
   }
@@ -651,7 +657,7 @@ class PipelineSpec extends AnyFunSuite {
         r.getDouble(3))).toSeq
     val stored = rows(similarity.Similarity.s15WalkOn(embS,
       spark.read.parquet(s"$root/g").select("vec_id", "nbr")
-        .localCheckpoint(true), 5, 12, 3))
+        .localCheckpoint(true), 5))
     val reg = rows(similarity.Similarity.x2DedupIndex(spark, sf))
     assert(stored == reg,
       "walk over the persisted survivor graph diverged from the " +
@@ -661,7 +667,7 @@ class PipelineSpec extends AnyFunSuite {
     // build-if-absent survivor vectors + graph under the
     // content-keyed root, then the walk; must equal the inline
     // composition exactly (and a second invocation walks the same
-    // store without rebuilding — the memo/_built path)
+    // store without rebuilding — its _built marker is found)
     val ensured = rows(
       similarity.Similarity.x2DedupIndexStored(spark, sf))
     assert(ensured == reg,
@@ -682,7 +688,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(stored == inline,
       "stored BM25 arm diverged from the inline arm")
     assert(stored.nonEmpty)
-    // second invocation reuses the landed store (memo/_built path)
+    // second invocation reuses the landed store (its _built marker)
     assert(rows(similarity.Similarity.t12Bm25Stored(spark, sf, 5))
       == inline)
   }

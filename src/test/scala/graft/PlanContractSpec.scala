@@ -650,19 +650,26 @@ class PlanContractSpec extends AnyFunSuite {
     val cv = emb.filter(col("vec_id") >= 10)
       .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
     val visited = similarity.Similarity.lshShortlist(spark, sf, 8)
-    val expand = similarity.Similarity.s15Expand(visited, graph, q, cv, 8)
-    GraftSession.scoped(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") { c =>
-      val round = GraftSession.on(c, expand)
-      round.queryExecution.executedPlan.execute().count()
-      val rp = round.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head
-      assert(!rp.contains("CartesianProduct") &&
-        !rp.contains("BroadcastNestedLoopJoin"),
-        s"round expansion degenerated to a nested loop:\n$rp")
-      assert(rp.contains("SortMergeJoin") || rp.contains("ShuffledHashJoin") ||
-        rp.contains("BroadcastHashJoin"),
-        s"no hash equi-join in the round expansion:\n$rp")
-    }
+    val expand = similarity.Similarity.s15Expand(visited, graph, q, cv)
+    // the same expansion keyed by lane, as s16's descent and layer-0
+    // rounds run it: a lane-tagged frontier, unseen per (q_id, lane)
+    val laned = visited.withColumn("lane", col("c_id") % 3)
+    val laneRound = similarity.Similarity.efExpand(laned, laned, graph,
+      q, cv, Seq("lane"))
+    for ((form, e) <- Seq("s15" -> expand, "lane-keyed" -> laneRound))
+      GraftSession.scoped(spark,
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1") { c =>
+        val round = GraftSession.on(c, e)
+        round.queryExecution.executedPlan.execute().count()
+        val rp = round.queryExecution.executedPlan.toString
+          .split("== Initial Plan ==").head
+        assert(!rp.contains("CartesianProduct") &&
+          !rp.contains("BroadcastNestedLoopJoin"),
+          s"$form round expansion degenerated to a nested loop:\n$rp")
+        assert(rp.contains("SortMergeJoin") || rp.contains("ShuffledHashJoin") ||
+          rp.contains("BroadcastHashJoin"),
+          s"no hash equi-join in the $form round expansion:\n$rp")
+      }
   }
 
   test("m5: banded equi-join only (no pairwise stage); the hashed " +

@@ -111,7 +111,7 @@ class StreamingEmbDedupSpec extends AnyFunSuite {
     val walked = rows(graft.similarity.Similarity.s15WalkOn(
       spark.read.parquet(vp),
       spark.read.parquet(gp).select("vec_id", "nbr")
-        .localCheckpoint(true), 5, 12, 3))
+        .localCheckpoint(true), 5))
     val reg = rows(
       graft.similarity.Similarity.x2DedupIndexStored(spark, sf))
     assert(walked == reg,
