@@ -26,11 +26,15 @@ object PlanAudit {
     val log = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, String)]
     override def onJobStart(j: SparkListenerJobStart): Unit = {
       jobs.incrementAndGet()
-      val site = Option(j.properties)
-        .flatMap(p => Option(p.getProperty("callSite.short")))
-        .filter(_.nonEmpty)
-        .orElse(j.stageInfos.lastOption.map(_.name))
-        .getOrElse("?")
+      def prop(k: String) =
+        Option(j.properties).flatMap(p => Option(p.getProperty(k)))
+      // a broadcast build's call site is a pool frame; its tag names it
+      val site =
+        if (prop("spark.job.tags").exists(_.contains("broadcast exchange")))
+          "broadcast"
+        else prop("callSite.short").filter(_.nonEmpty)
+          .orElse(j.stageInfos.lastOption.map(_.name))
+          .getOrElse("?")
       open.put(j.jobId, (j.time, site))
     }
     override def onJobEnd(j: SparkListenerJobEnd): Unit = {

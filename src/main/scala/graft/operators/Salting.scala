@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 
 /** Skew-resistant two-phase aggregation.
   *
@@ -36,7 +37,8 @@ object Salting {
     // pure content hash would funnel them all into one shard and
     // defeat the salting entirely.
     val salted = df.withColumn("__salt",
-      pmod(hash(spark_partition_id() +: df.columns.map(col): _*), lit(salts)))
+      pmod(hash(spark_partition_id() +:
+        ArraySeq.unsafeWrapArray(df.columns.map(col)): _*), lit(salts)))
     val phase1 = aggs.map {
       case SaltedSum(n, c) => sum(c).as(n)
       case SaltedCount(n) => count(lit(1)).as(n)

@@ -585,14 +585,16 @@ object Similarity {
     Tables.embeddings(s, d)
       .filter(col("vec_id") < 10 || col("label").isin(labels: _*))
 
-  /** A single-graph store's layout: `graph` under its directory. */
+  /** A single-graph store's layout: `graph` under its directory; the
+    * declared columns of every graph store (a read infers nothing). */
   private def graphIn(r: Path): String = new Path(r, "graph").toString
+  private val graphSchema = "vec_id BIGINT, nbr BIGINT"
 
-  /** The one read of a persisted neighbor-list store: its
-    * (vec_id, nbr) lists, checkpointed because every walk round joins
-    * them. */
+  /** The one read of a persisted neighbor-list store: its (vec_id,
+    * nbr) lists, streamed by each walk round's join — never copied
+    * into executor memory per walk. */
   private def readGraph(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(path).select("vec_id", "nbr").localCheckpoint(true)
+    s.read.schema(graphSchema).parquet(path).select("vec_id", "nbr")
 
   /** Build-if-absent per-predicate GRAPH SHARD for the registered
     * s18: the navigable search graph built over the predicate-
@@ -1145,12 +1147,9 @@ object Similarity {
     * seed-bound 30×/100× drift corpora, PROBE_S15EF). */
   private[graft] def s15WalkQC(q: DataFrame, cv: DataFrame,
       graph: DataFrame, k: Int): DataFrame =
-    GraftSession.scoped(q.sparkSession, walkState: _*) { c =>
-      // |Q|-bounded constant query batch → LocalRelation (zero
-      // per-round broadcast-build jobs; see localize)
-      val lq = localize(q)
+    onWalk(q) { (c, lq) =>
       val seed = lshShortlistQC(lq, cv, walkBeam).localCheckpoint(true)
-      efWalk(c, seed, None, graph, lq, cv, k)
+      efWalk(c, seed, laned = false, graph, lq, cv, k)
     }
 
   /** S16: HIERARCHICAL navigable-small-world search (HNSW — Malkov &
@@ -1334,11 +1333,8 @@ object Similarity {
     val uppers = upperPaths.map(readGraph(s, _))
     // with a persisted atlas the stored walk touches NO corpus-sized
     // computation at all: seeds come from the atlas store, hops from
-    // the layer stores. Single consumer (the seed scoring pass), so
-    // scan it directly — a checkpoint here was one pure-overhead job
-    // per invocation (r15 opt)
-    val entry = atlasPath.map(p => s.read.parquet(p)
-      .select("c_id", "comp", "csize"))
+    // the layer stores, each streamed by its consumer, never copied
+    val entry = atlasPath.map(s.read.schema(atlasSchema).parquet(_))
     s16Walk(s, d, g0, uppers, k, entry)
   }
 
@@ -1359,8 +1355,7 @@ object Similarity {
     * atlas of the hierarchy built on `emb`, from its persisted g0. */
   private def writeAtlas(emb: DataFrame, layer0Path: String,
       atlasPath: String, levels: Int): Unit = {
-    val g0 = emb.sparkSession.read.parquet(layer0Path)
-      .select("vec_id", "nbr")
+    val g0 = readGraph(emb.sparkSession, layer0Path)
     val lvl = emb.filter(col("vec_id") >= 10)
       .withColumn("level", levelOf(col("vec_id"), levels))
     entryAtlas(lvl, compsOf(g0))
@@ -1369,12 +1364,13 @@ object Similarity {
   }
 
   /** A hierarchy store family's files under `r`: layer 0, the
-    * `levels` upper layers, and the entry atlas. */
+    * `levels` upper layers, and the entry atlas (declared columns). */
   private def hierarchyLayout(levels: Int)(r: Path)
       : (String, Seq[String], String) = (
     new Path(r, "g0").toString,
     (1 to levels).map(l => new Path(r, s"g$l").toString),
     new Path(r, "atlas").toString)
+  private val atlasSchema = "c_id BIGINT, comp BIGINT, csize BIGINT"
 
   /** Write the full HNSW store family built on `emb` — the one
     * hierarchy writer of s16 (the corpus) and x5 (the survivors):
@@ -1461,16 +1457,13 @@ object Similarity {
     * inline-build and maintained-store s16 forms. */
   private def s16Walk(s: SparkSession, d: String, g0: DataFrame,
       upperGraphs: Seq[DataFrame], k: Int,
-      entry: Option[DataFrame]): DataFrame =
-    GraftSession.scoped(s, walkState: _*) { c =>
+      entry: Option[DataFrame]): DataFrame = {
+    val emb = Tables.embeddings(s, d) // the walk's one read of it
+    onWalk(queriesOf(emb)) { (c, q) =>
       val levels = upperGraphs.size
-      val emb = Tables.embeddings(s, d).filter(col("vec_id") >= 10)
-      val lvl = emb.withColumn("level", levelOf(col("vec_id"), levels))
-      // the query batch is a |Q|-bounded constant joined into every
-      // descent and layer-0 round — one LocalRelation, zero per-round
-      // broadcast-build jobs / embeddings re-scans (see localize)
-      val q = localize(queries(s, d))
-      val cv = corpus(s, d).select(col("c_id"), col("c_emb"))
+      val lvl = emb.filter(col("vec_id") >= 10)
+        .withColumn("level", levelOf(col("vec_id"), levels))
+      val cv = corpusOf(emb).select(col("c_id"), col("c_emb"))
       // The ENTRY ATLAS ([[entryAtlas]] — why it exists and what each
       // piece buys is measured at the [[s16Hnsw]] scaladoc): a pure
       // function of g0, so a maintained deployment passes the
@@ -1515,27 +1508,22 @@ object Similarity {
         .withColumn("rs", row_number().over(Window.partitionBy("q_id")
           .orderBy(col("csize").desc, col("comp").asc)))
         .filter(col("rk") <= descentBeam || col("rs") === 1)
-        .transform(cpState(c)) // consumers: the walk state AND the quotas;
-        // bounded pipeline (|atlas|·|Q| rows, cv streams) — see cpState
-      var cur = seeds.select(col("q_id"), col("c_id"), col("cos3"),
-        col("comp").as("lane"))
-      // MASS-PROPORTIONAL frontier quotas: each lane's share of the
-      // walkBeam expansion budget ∝ its component's size (integer `div`,
-      // floor 1 — exact in both engines). The corpus's answers live
-      // where its mass lives: the giant organic component takes
-      // essentially the whole beam, while a 29-member dup chain keeps
-      // one slot — enough to surface its best member, which the seed
-      // round already scored. A flat per-lane split measured 4× worse
-      // giant-lane conversion at 30× (9 vs 36 expansions).
-      val quotas = seeds
-        .select(col("q_id"), col("comp").as("lane"), col("csize"))
-        .withColumn("tot", sum("csize").over(Window.partitionBy("q_id")))
-        .withColumn("quota",
-          greatest(lit(1L), expr(s"($walkBeam * csize) div tot")))
-        .select("q_id", "lane", "quota")
-      // |Q|·lanes rows, joined by every layer-0 round: LocalRelation
-      // (zero per-round broadcast-build jobs), not a checkpoint
-      val quotasL = localize(quotas)
+        // MASS-PROPORTIONAL frontier quotas: each lane's share of the
+        // walkBeam expansion budget ∝ its component's size (integer
+        // `div`, floor 1 — exact in both engines). The corpus's answers
+        // live where its mass lives: the giant organic component takes
+        // essentially the whole beam, while a 29-member dup chain keeps
+        // one slot — enough to surface its best member, which the seed
+        // round already scored. A flat per-lane split measured 4× worse
+        // giant-lane conversion at 30× (9 vs 36 expansions). A quota is
+        // a function of (q_id, lane), so it rides the lane's state rows
+        // instead of being joined into every round.
+        .withColumn("quota", greatest(lit(1L), expr(
+          s"($walkBeam * csize) div sum(csize) over (partition by q_id)")))
+      // one consumer, but the first descent round references the
+      // state 3×; bounded pipeline (|atlas|·|Q| rows, cv streams)
+      var cur = cpState(c)(seeds.select(col("q_id"), col("c_id"),
+        col("cos3"), col("comp").as("lane"), col("quota")))
       val byLane = Window.partitionBy("q_id", "lane")
         .orderBy(col("cos3").desc, col("c_id").asc)
       // descent: expand every lane head through the upper layer, keep
@@ -1555,97 +1543,90 @@ object Similarity {
         for (_ <- 1 to upperRounds)
           cur = cpState(c)(cur
             .union(efExpand(cur, cur, upperGraphs(l - 1), q, cv,
-              Seq("lane")))
+              laneCols))
             .withColumn("rk", row_number().over(byLane))
             .filter(col("rk") <= descentBeam)
-            .select("q_id", "c_id", "cos3", "lane"))
+            .drop("rk"))
       }
       // layer 0: s15's ef rounds, per lane, at the quota widths
-      efWalk(c, cur, Some(quotasL), g0, q, cv, k)
+      efWalk(c, cur, laned = true, g0, q, cv, k)
     }
+  }
 
   /** The ef-search rounds and final top-k re-rank of every walk:
-    * s15's (one frontier per query, [[walkBeam]] wide; `quotas` None)
+    * s15's (one frontier per query, [[walkBeam]] wide; not `laned`)
     * and s16's layer 0 (one frontier per (query, lane), each lane's
-    * `quota` wide). ONE state frame, ONE materialization per round
-    * (r15 opt): separate visited/expanded frames cost 3 eager
-    * pipelines per round (58 jobs per s15 walk for ~600 state rows,
-    * s16: 133). An `exp` FLAG on the visited rows, leading the window
-    * order, ranks the unexpanded prefix exactly as an anti-join +
-    * window would, so frontier (the top-width unexpanded slice),
-    * flag update and expansion union form one checkpointed plan.
-    * Bit-identical output — the oracle and the stored≡inline specs
-    * pin it. The re-rank is the only global step; with lanes, a
-    * vector reached from two lanes is deduped first. */
-  private def efWalk(c: SparkSession, seed: DataFrame,
-      quotas: Option[DataFrame], graph: DataFrame, q: DataFrame,
-      cv: DataFrame, k: Int): DataFrame = {
-    val lanes = if (quotas.isDefined) Seq("lane") else Nil
-    val key = "q_id" +: lanes
-    val byKeyEf = Window.partitionBy(key.map(col): _*)
+    * `quota` wide; [[laneCols]] ride the state rows). ONE state frame,
+    * ONE materialization per round (r15 opt): separate visited/expanded
+    * frames cost 3 eager pipelines per round (58 jobs per s15 walk for
+    * ~600 state rows, s16: 133). An `exp` FLAG on the visited rows,
+    * leading the window order, ranks the unexpanded prefix exactly as
+    * an anti-join + window would, so frontier (the top-width
+    * unexpanded slice), flag update and expansion union form one
+    * checkpointed plan. Bit-identical output — the oracle and the
+    * stored≡inline specs pin it. The re-rank is the only global step;
+    * with lanes, a vector reached from two lanes is deduped first. */
+  private def efWalk(c: SparkSession, seed: DataFrame, laned: Boolean,
+      graph: DataFrame, q: DataFrame, cv: DataFrame, k: Int): DataFrame = {
+    val lanes = if (laned) laneCols else Nil
+    val byKeyEf = Window.partitionBy(("q_id" +: lanes).map(col): _*)
       .orderBy(col("exp").asc, col("cos3").desc, col("c_id").asc)
-    // frontier width: the beam, or the lane's quota (a lane without
-    // one never expands)
-    val (front, spent) =
-      if (quotas.isEmpty) (col("rk") <= walkBeam, col("rk") <= walkBeam)
-      else (col("rk") <= col("quota"),
-        col("rk") <= coalesce(col("quota"), lit(0L)))
+    // frontier width: the beam, or the lane's quota
+    val width = col("rk") <= (if (laned) col("quota") else lit(walkBeam))
     var state = seed.withColumn("exp", lit(false))
     for (_ <- 1 to walkRounds) {
-      val ranked = quotas
-        .fold(state)(qt => state.join(broadcast(qt), key, "left"))
-        .withColumn("rk", row_number().over(byKeyEf))
-      val frontier = ranked.filter(!col("exp") && front)
+      val ranked = state.withColumn("rk", row_number().over(byKeyEf))
+      val frontier = ranked.filter(!col("exp") && width)
       state = cpState(c)(ranked
         .select((Seq("q_id", "c_id", "cos3") ++ lanes).map(col) :+
-          (col("exp") || spent).as("exp"): _*)
+          (col("exp") || width).as("exp"): _*)
         .union(efExpand(frontier, state, graph, q, cv, lanes)
           .withColumn("exp", lit(false))))
     }
     val found = state.select("q_id", "c_id", "cos3")
-    (if (quotas.isDefined) found.distinct() else found)
+    (if (laned) found.distinct() else found)
       .withColumn("rank", row_number().over(byQuery).cast("long"))
       .filter(col("rank") <= k)
       .select(col("q_id"), col("rank"), col("c_id"), col("cos3").as("cos"))
       .orderBy("q_id", "rank")
   }
 
+  /** A lane's state columns: its id (the seed's component) and its
+    * frontier quota, a function of (q_id, lane) — so keying a window
+    * or an anti-join by both partitions exactly as by the lane. */
+  private val laneCols = Seq("lane", "quota")
+
   /** Materialize a walk-STATE pipeline on the walk's scoped session
-    * `c` ([[walkState]]: AQE off, 8 partitions; r16 opt) and move the
-    * checkpoint back. The state is |Q|-bounded (corpus sides are only
-    * streamed probes of broadcast joins), so AQE only adds a job per
-    * exchange per round: 117 jobs, 7.7 s for the stored s16 walk at
-    * sf0.1 (PlanAudit r16); without it a round is ONE result job plus
-    * its broadcast builds. Corpus-touching pipelines keep AQE. */
+    * `c` ([[onWalk]]; r16 opt) and move the checkpoint back. The
+    * state is |Q|-bounded (corpus sides are only streamed probes of
+    * broadcast joins), so AQE only adds a job per exchange per round:
+    * 117 jobs, 7.7 s for the stored s16 walk at sf0.1 (PlanAudit r16);
+    * without it a round is ONE result job plus its broadcast builds.
+    * Corpus-touching pipelines keep AQE. */
   private def cpState(c: SparkSession)(df: DataFrame): DataFrame =
     GraftSession.on(df.sparkSession,
       GraftSession.on(c, df).localCheckpoint(true))
 
-  private val walkState = Seq(
-    "spark.sql.adaptive.enabled" -> "false",
-    "spark.sql.shuffle.partitions" -> "8")
-
-  /** Collect a |Q|-BOUNDED constant frame into a LocalRelation
-    * (r15 opt). The walk's query vectors and lane quotas are joined
-    * into every round's plan; as distributed frames each use costs a
-    * broadcast-build stage job (and a parquet re-scan) PER ROUND,
-    * while a LocalRelation's broadcast build is driver-local — zero
-    * jobs, zero scans. Bounded by construction: |Q| rows (the query
-    * batch) or |Q|·lanes quota rows — the same corpus-independent
-    * class as the repo's other bounded collects (bloom words, spine
-    * frames), NOT a corpus funnel. One collect job at walk start
-    * replaces rounds× broadcast jobs. */
-  private def localize(df: DataFrame): DataFrame = {
-    // Size guard (ADVICE r15): misuse on a corpus-sized frame must
-    // fail loudly, not OOM the driver — every intended input is a
-    // query batch (|Q|) or quota frame (|Q|·lanes), orders of
-    // magnitude below this bound at any scale.
-    val rows = df.limit(100001).collect()
+  /** Run a walk over its query batch `q` (r15/r16 opt): `q` collected
+    * once into a LocalRelation (every round joins it; as a parquet
+    * frame each join would re-scan), and a scoped clone `c` for the
+    * walk-state pipelines: AQE off, one shuffle partition per 1,000
+    * queries (each is one more task per broadcast of the state). A
+    * LocalRelation's broadcast still runs a job per round, one task per
+    * slot (LocalTableScanExec has no driver-side collect): the walk's
+    * remaining fixed cost per round. */
+  private def onWalk(q: DataFrame)(
+      walk: (SparkSession, DataFrame) => DataFrame): DataFrame = {
+    val rows = q.limit(100001).collect()
     require(rows.length <= 100000,
-      "localize() is for |Q|-bounded constant frames; got >100k rows " +
-        s"from plan: ${df.queryExecution.logical.nodeName}")
-    df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), df.schema)
+      "a walk's query batch must be |Q|-bounded; got >100k rows " +
+        s"from plan: ${q.queryExecution.logical.nodeName}")
+    val lq = q.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), q.schema)
+    val parts = ((rows.length + 999) / 1000).max(1)
+    GraftSession.scoped(q.sparkSession,
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> parts.toString)(walk(_, lq))
   }
 
   /** One walk round's expansion, the one of every walk (s15's rounds,

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 
 /** Elasticsearch bulk-format sink — the reference's Load stage
   * (reference: bugzilla_etl/bz_etl.py:131 setup_es + output queues
@@ -22,7 +23,8 @@ object EsSink {
     val action = concat(
       lit(s"""{"index":{"_index":"$index","_id":""""),
       col(idCol).cast("string"), lit("\"}}"))
-    val source = to_json(struct(df.columns.map(col): _*))
+    val source =
+      to_json(struct(ArraySeq.unsafeWrapArray(df.columns.map(col)): _*))
     df.select(concat(action, lit("\n"), source).as("value"))
       .write.mode(SaveMode.Overwrite).text(outDir)
   }

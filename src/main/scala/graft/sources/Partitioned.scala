@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 
 /** Time-partitioned table layout — the output side of the scale story
   * (Bucketed covers the join side). The reference's incremental loop
@@ -82,7 +83,8 @@ object Partitioned {
     // whole day in one task regardless of the target
     val slice = data
       .withColumn("_salt",
-        pmod(hash(data.columns.map(col): _*), lit(filesPerDay)))
+        pmod(hash(ArraySeq.unsafeWrapArray(data.columns.map(col)): _*),
+          lit(filesPerDay)))
       .repartition(filesPerDay * days.size, col("dt"), col("_salt"))
       .drop("_salt")
     slice.write.mode(SaveMode.Overwrite)

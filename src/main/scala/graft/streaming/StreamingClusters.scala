@@ -3,6 +3,7 @@ package graft.streaming
 import graft.dedup.Dedup
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SaveMode}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 
 /** CONTINUOUS cluster maintenance — d11's fold run at ingest time,
   * with the doc→cluster map PERSISTED as a cluster-hash-partitioned
@@ -102,7 +103,8 @@ object StreamingClusters {
       // new content of exactly those partitions: surviving unchanged
       // rows + relabeled rows + arriving rows
       val keep = oldMap
-        .filter(pbOf(col("cluster"), nb).isin(pbs: _*))
+        .filter(pbOf(col("cluster"), nb)
+          .isin(ArraySeq.unsafeWrapArray(pbs): _*))
         .join(changed.select("doc_id"), Seq("doc_id"), "left_anti")
       val fresh = changed
         .select(col("doc_id"), col("new_cluster").as("cluster"))

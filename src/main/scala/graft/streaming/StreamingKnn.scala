@@ -4,6 +4,7 @@ import graft.dedup.Dedup
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 
 /** Cadence knobs for a maintained k-NN graph — ONE fold serves both
   * graph kinds the engine publishes:
@@ -226,7 +227,7 @@ object StreamingKnn {
       // batch reads 2 directories, not the whole graph.
       val inPb = (if (StoreFs.exists(s, graphPath))
         s.read.parquet(graphPath)
-          .filter(col("pb").isin(touchedPbs: _*))
+          .filter(col("pb").isin(ArraySeq.unsafeWrapArray(touchedPbs): _*))
           .select("vec_id", "rk", "nbr", "cos").localCheckpoint(true)
       else newEdges.limit(0)
         .select(col("vec_id"), lit(0L).as("rk"), col("nbr"), col("cos")))

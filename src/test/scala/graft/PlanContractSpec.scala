@@ -631,8 +631,9 @@ class PlanContractSpec extends AnyFunSuite {
       "round's expansion is hash equi-joins, no cartesian, window on " +
       "the query key") {
     val p = finalPlan("s15_graph_search")
-    // seed, graph, and every round's fold are checkpointed: the final
-    // top-k segment must read NO parquet and contain no join at all
+    // the seed and every round's fold are checkpointed (each round's
+    // join streams the graph store): the final top-k segment must
+    // read NO parquet and contain no join at all
     assert(scanCount(p) == 0, s"parquet re-scanned past checkpoints:\n$p")
     assert(!p.contains("CartesianProduct"), s"cartesian:\n$p")
     assert("windowspecdefinition\\(q_id".r.findAllIn(p).nonEmpty,
@@ -745,6 +746,48 @@ class PlanContractSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"), s"cartesian:\n$p")
     assert("windowspecdefinition\\(q_id".r.findAllIn(p).nonEmpty,
       s"final top-k window not partitioned by q_id:\n$p")
+  }
+
+  test("s16: the stored walk's job ledger — a warm walk's build and " +
+      "write runs a bounded job count, and exactly its 10 walk-state " +
+      "checkpoints (1 seed + 6 descent + 3 ef): no store is copied") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val out = java.nio.file.Files.createTempDirectory("graft_ledger")
+      .toString
+    def walk(): Unit = SparkEntry.queries("s16_hnsw")(spark, sf)
+      .write.mode("overwrite").parquet(out)
+    walk() // warm-up: builds (or finds) the stores
+    // count only this thread's jobs (and the broadcast builds they
+    // spawn, which inherit its tags): another suite's stray job must
+    // not move the ledger
+    val tag = "graft-walk-ledger"
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val ledger = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).flatMap(p =>
+            Option(p.getProperty("spark.job.tags"))).exists(_.contains(tag)))
+          // the result stage (created last) carries the call site
+          sites.add(j.stageInfos.maxByOption(_.stageId).fold("")(_.name))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(ledger)
+    sc.addJobTag(tag)
+    try walk()
+    finally {
+      sc.removeJobTag(tag)
+      org.apache.spark.sql.graft.Bridge.drainListeners(spark)
+      sc.removeSparkListener(ledger)
+    }
+    val jobs = sites.asScala.toSeq
+    val ledgerText = jobs.groupBy(identity).view.mapValues(_.size)
+      .toSeq.sortBy(-_._2).mkString("\n")
+    assert(jobs.count(_.startsWith("localCheckpoint")) == 10,
+      s"walk-state checkpoints != 1 seed + 6 descent + 3 ef:\n$ledgerText")
+    // 67 with the stores streamed: 10 checkpoints, the query batch
+    // collect, one embeddings read, and the rounds' broadcast builds
+    // and the final re-rank's stages
+    assert(jobs.size <= 67, s"${jobs.size} jobs:\n$ledgerText")
   }
 
   test("s17: filtered ANN — the label predicate reaches the parquet " +
